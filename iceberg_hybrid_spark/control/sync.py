@@ -264,26 +264,24 @@ class MultiRegionCoordinator:
         return progress
 
     def _process_metadata_sync(self, ev: SyncEvent) -> None:
-        """Register target-region placement if absent; path convention
-        tables/<ns>/<name> (SyncOrchestrator.scala:62-86)."""
-        if self.registry.get_table_data_path(ev.table, ev.target_region) is None:
-            base = self.registry.get_region_storage(ev.target_region).base_path
-            self.registry.register_table_location(
-                ev.table, ev.target_region, f"{base}/tables/{ev.table.replace('.', '/')}"
-            )
+        """Register target-region placement; path convention
+        tables/<ns>/<name> (SyncOrchestrator.scala:62-86).  The placement
+        is always the mirror's own root: a table already in the target
+        catalog registers that root, otherwise the mirror opens at the
+        registered (or conventional) path."""
         target_tables = self.catalogs.setdefault(ev.target_region, {})
-        if ev.table not in target_tables:
-            src_tbl = self.catalogs[ev.source_region][ev.table]
-            import os
-
-            target_tables[ev.table] = HyTable(
-                self.spark,
-                os.path.join(os.path.dirname(src_tbl.root) + f"_{ev.target_region}", ev.table),
-            )
+        mirror = target_tables.get(ev.table)
+        if mirror is None:
+            path = self.registry.get_table_data_path(ev.table, ev.target_region)
+            if path is None:
+                base = self.registry.get_region_storage(ev.target_region).base_path
+                path = f"{base}/tables/{ev.table.replace('.', '/')}"
+            mirror = target_tables[ev.table] = HyTable(self.spark, path)
+        self.registry.register_table_location(ev.table, ev.target_region, mirror.root)
 
     def _process_data_sync(self, ev: SyncEvent) -> ReplicationMetrics:
         """Replicate data src→target: plan (diff+skip-if-exists) →
-        distributed copy → verify → promote (SyncOrchestrator.scala:89-132)."""
+        copy → verify → promote (SyncOrchestrator.scala:89-132)."""
         src = self.catalogs[ev.source_region][ev.table]
         dst = self.catalogs[ev.target_region][ev.table]
         src_seq = src.snapshot_by_id(ev.commit_id).sequence_number

@@ -6,11 +6,25 @@ Spark-first re-expression of the reference's replica pipeline:
                         snapshot manifest set-diff vs destination, then
                         skip-if-exists dedup with a size integrity probe
                         (the ETag/size check at :90-95).
-- ``copy_files``      ≙ the rclone data mover — distributed over executors.
+- ``copy_files``      ≙ the rclone data mover.
 - ``replicate``       ≙ the 16-step golden path (HybridAppConfiguration.java:108-214):
                         copy, staged shadow-commit, verify (StateReconciler.java:65-80
                         — every file must exist with matching size), then
                         atomic promote (setVisibility ≙ WAP publish).
+
+Where the per-file work runs: ``copy_files``, ``verify`` and
+``audit_closure`` copy, stat and hash in the driver process, one file
+at a time.  A typical commit carries a couple of files, and a Spark
+job's fixed cost dwarfs that work: on a 4-vCPU host with local[2] a
+trivial two-task Python-RDD job costs ~520 ms of CPU (264-306 ms wall),
+most of it the Python workers' per-task set-up, while the driver copies
+two ~60 KB files in 0.8 ms and md5-checks 16 files (314 KB) in 1.1 ms.
+The driver already stats destination files (``plan``) and md5s every
+new file (``HyTable._write_data_files``), so it needs no access it
+lacks.  ``CopyJob`` / ``copy_files_async`` run the same per-file body
+(``_copy_partition``) as a Spark job, because their ``cancel()`` works
+by cancelling the job group; its tasks import this module on the
+workers, so the package must be importable there.
 
 Path localization: manifests store table-relative paths, so replicating a
 snapshot to another region's root *is* the base-path rewrite of
@@ -21,12 +35,14 @@ the region.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import SparkSession
 
-from .table import DataFileRef, HyTable, Snapshot
+from .table import DataFileRef, HyTable, Snapshot, file_md5
 
 
 @dataclass(frozen=True)
@@ -76,54 +92,77 @@ def plan(src: HyTable, dst: HyTable, target_seq: int | None = None) -> list[Data
     return todo
 
 
-def copy_files(
+def _copy_partition(pairs, throttle_s: float = 0.0):
+    """Copy (src, dst) pairs one file at a time, each through a tmp file
+    and an atomic rename; yields one (files, bytes) tuple, so the async
+    copy's collect returns O(partitions) tuples, never per-file rows.
+    ``throttle_s`` sleeps per file."""
+    copied = 0
+    nbytes = 0
+    for s, d in pairs:
+        if throttle_s:
+            time.sleep(throttle_s)
+        os.makedirs(os.path.dirname(d), exist_ok=True)
+        tmp = d + ".inprogress"
+        shutil.copyfile(s, tmp)
+        os.replace(tmp, d)  # atomic visibility per file
+        copied += 1
+        nbytes += os.path.getsize(d)
+    yield (copied, nbytes)
+
+
+def _pairs(src_root: str, dst_root: str, refs: list[DataFileRef]) -> list[tuple[str, str]]:
+    return [(os.path.join(src_root, r.path), os.path.join(dst_root, r.path)) for r in refs]
+
+
+def _metrics(results, n_refs: int, t0: float) -> ReplicationMetrics:
+    files = sum(r[0] for r in results)
+    nbytes = sum(r[1] for r in results)
+    return ReplicationMetrics(files, nbytes, n_refs - files, int((time.time() - t0) * 1000))
+
+
+def _distributed_copy(
     spark: SparkSession,
     src_root: str,
     dst_root: str,
     refs: list[DataFileRef],
     throttle_s: float = 0.0,
-    concurrency: int | None = None,
 ) -> ReplicationMetrics:
-    """Distributed per-file copy — the parallel fan-out of
-    SyncOrchestrator.processDataSync (ZIO.foreachPar over files, :111).
-
-    Runs on executors via a parallelized task list (per-partition
-    imperative IO is the one legitimate RDD use).  On a real cluster each
-    task streams bytes region→region; locally it's a filesystem copy.
-    Metrics are reduced per partition executor-side; the collect returns
-    O(partitions) tuples, never per-file rows.  ``throttle_s`` sleeps per
-    file (tests use it to hold a copy in flight for cancellation).
-    ``concurrency`` caps the parallel copy slices — the knob the
-    backpressure controller actuates (RateController.tick →
-    BackpressureDecision.concurrency).
-    """
+    """Per-file copy fanned out over executors as a parallelized task
+    list (per-partition imperative IO is the one legitimate RDD use).
+    On a real cluster each task streams bytes region→region; locally
+    it's a filesystem copy."""
     t0 = time.time()
     if not refs:
         return ReplicationMetrics(0, 0, 0, 0)
-    pairs = [(os.path.join(src_root, r.path), os.path.join(dst_root, r.path)) for r in refs]
+    pairs = _pairs(src_root, dst_root, refs)
+    n_slices = max(1, min(len(pairs), spark.sparkContext.defaultParallelism))
+    results = (
+        spark.sparkContext.parallelize(pairs, n_slices)
+        .mapPartitions(partial(_copy_partition, throttle_s=throttle_s))
+        .collect()
+    )
+    return _metrics(results, len(refs), t0)
 
-    def _copy_partition(it):
-        import shutil
 
-        copied = 0
-        nbytes = 0
-        for s, d in it:
-            if throttle_s:
-                time.sleep(throttle_s)
-            os.makedirs(os.path.dirname(d), exist_ok=True)
-            tmp = d + ".inprogress"
-            shutil.copyfile(s, tmp)
-            os.replace(tmp, d)  # atomic visibility per file
-            copied += 1
-            nbytes += os.path.getsize(d)
-        yield (copied, nbytes)
+def copy_files(
+    spark: SparkSession,
+    src_root: str,
+    dst_root: str,
+    refs: list[DataFileRef],
+    concurrency: int | None = None,
+) -> ReplicationMetrics:
+    """Per-file copy (≙ the per-file fan-out of
+    SyncOrchestrator.processDataSync, ZIO.foreachPar over files, :111),
+    run in this process one file at a time.
 
-    cap = concurrency or spark.sparkContext.defaultParallelism
-    n_slices = max(1, min(len(pairs), cap))
-    results = spark.sparkContext.parallelize(pairs, n_slices).mapPartitions(_copy_partition).collect()
-    files = sum(r[0] for r in results)
-    nbytes = sum(r[1] for r in results)
-    return ReplicationMetrics(files, nbytes, len(refs) - files, int((time.time() - t0) * 1000))
+    ``concurrency`` is the copy budget the backpressure controller sets
+    (RateController.tick → BackpressureDecision.concurrency); one
+    sequential copy stream is within any budget, so it changes nothing
+    here.  ``spark`` is unused; both stay for the callers.
+    """
+    t0 = time.time()
+    return _metrics(list(_copy_partition(_pairs(src_root, dst_root, refs))), len(refs), t0)
 
 
 class CopyJob:
@@ -133,10 +172,11 @@ class CopyJob:
 
     The copy runs in a daemon thread under a dedicated Spark job group
     (interrupt-on-cancel); ``cancel()`` cancels the group, aborting the
-    running stages.  Per-file writes stay atomic (tmp + rename), so a
-    cancelled job leaves no torn files and a re-run is a plain
-    skip-if-exists resync.  States: pending → running → completed |
-    failed | cancelled.
+    running stages.  So it runs on executors, unlike ``copy_files``: a
+    copy in the driver process could not be cancelled.  Per-file
+    writes stay atomic (tmp + rename), so a cancelled job leaves no torn
+    files and a re-run is a plain skip-if-exists resync.  States:
+    pending → running → completed | failed | cancelled.
     """
 
     def __init__(
@@ -181,7 +221,9 @@ class CopyJob:
             self._spark.sparkContext.setJobGroup(
                 self.job_id, f"async copy {self.job_id}", interruptOnCancel=True
             )
-            m = copy_files(self._spark, src_root, dst_root, refs, throttle_s)
+            m = _distributed_copy(
+                self._spark, src_root, dst_root, refs, throttle_s=throttle_s
+            )
             with self._lock:
                 if not self._cancelled:
                     self._metrics = m
@@ -315,8 +357,7 @@ def verify(
     None = full L1 verification, which also re-hashes file contents
     against the manifest's md5 (≙ ObjectStorePort ETag integrity,
     legacy ObjectStorePort.java:36-71) so same-size corruption is caught.
-    Content hashing is distributed over executors — the bytes never
-    funnel through the driver.
+    The files are stat'ed and hashed in this process.
     """
     manifest = list(snap.manifest)
     if checksums is None:
@@ -329,41 +370,35 @@ def verify(
     if not manifest:
         return
     triples = [(f.path, f.size_bytes, f.checksum if checksums else "") for f in manifest]
-    errors = _distributed_check(dst.spark, dst.root, triples)
+    errors = _check_files(dst.root, triples)
     if errors:
         raise VerificationError("; ".join(errors))
 
 
-def _distributed_check(spark: SparkSession, root: str, triples: list[tuple]) -> list[str]:
-    """Executor-side existence/size/md5 probe over (path, size, md5)
-    triples; returns the sorted error strings (O(errors) collect —
-    file bytes never funnel through the driver)."""
-
-    def _check_partition(it):
-        from iceberg_hybrid_spark.lake.table import file_md5
-
-        for rel, size, md5 in it:
-            full = os.path.join(root, rel)
-            if not os.path.exists(full):
-                yield f"missing replicated file: {rel}"
-                continue
-            actual = os.path.getsize(full)
-            if actual != size:
-                yield f"size mismatch for {rel}: expected {size}, got {actual}"
-                continue
-            if md5 and file_md5(full) != md5:
-                yield f"checksum mismatch for {rel}: content differs from manifest md5"
-
-    sc = spark.sparkContext
-    n_slices = min(len(triples), sc.defaultParallelism)
-    return sorted(sc.parallelize(triples, n_slices).mapPartitions(_check_partition).collect())
+def _check_files(root: str, triples: list[tuple]) -> list[str]:
+    """Existence/size/md5 probe over (path, size, md5) triples; returns
+    the sorted error strings, one per bad file (an empty md5 skips
+    hashing)."""
+    errors = []
+    for rel, size, md5 in triples:
+        full = os.path.join(root, rel)
+        if not os.path.exists(full):
+            errors.append(f"missing replicated file: {rel}")
+            continue
+        actual = os.path.getsize(full)
+        if actual != size:
+            errors.append(f"size mismatch for {rel}: expected {size}, got {actual}")
+            continue
+        if md5 and file_md5(full) != md5:
+            errors.append(f"checksum mismatch for {rel}: content differs from manifest md5")
+    return sorted(errors)
 
 
 def audit_closure(table: HyTable, checksums: bool = True) -> dict:
     """L2 nightly full-closure audit (≙ the scheduled third verification
     tier, iceberg-arch-hybrid-replica-dr.md:148-158): verify the file
     closure of EVERY retained snapshot — not just the promoted head —
-    in one distributed pass.
+    in one pass.
 
     L0 samples the head and L1 fully re-hashes it; only L2 catches
     corruption of a file referenced solely by an *older* retained
@@ -372,7 +407,8 @@ def audit_closure(table: HyTable, checksums: bool = True) -> dict:
     all retained snapshots' manifests (staged included — they are
     pre-publish state the reconciler must not lose), deduplicated by
     (path, size, checksum) so a file shared by many snapshots is stat'ed
-    and hashed exactly once regardless of history depth.
+    and hashed exactly once regardless of history depth, in this
+    process (see ``verify``).
 
     Returns an audit report dict; raises :class:`VerificationError` on
     any violation, naming the earliest snapshot seq referencing each bad
@@ -386,7 +422,7 @@ def audit_closure(table: HyTable, checksums: bool = True) -> dict:
             if key not in ref_by_key:
                 ref_by_key[key] = (snap.sequence_number, f)
     triples = list(ref_by_key)
-    errors = _distributed_check(table.spark, table.root, triples)
+    errors = _check_files(table.root, triples)
     if errors:
         first_seq = {path: seq for (path, _, _), (seq, _) in ref_by_key.items()}
 

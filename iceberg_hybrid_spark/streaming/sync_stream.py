@@ -209,8 +209,9 @@ def start_replication_stream(
     drain rate-adaptive per iceberg-arch-hybrid-replica-dr.md:172-185:
     before each replicate the controller is ticked with the last copy's
     failure rate and the observed mirror lag (now − source commit
-    timestamp); the resulting concurrency budget caps the copy fan-out,
-    and ``controller.gate_writes`` exposes the write-side gating signal
+    timestamp); the resulting concurrency budget is passed to
+    ``replicate`` (whose in-process copy is one stream, within any
+    budget), and ``controller.gate_writes`` exposes the write-side gating signal
     for producers to honor.  Without a controller the drain is
     fixed-rate, as before.
     """

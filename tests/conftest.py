@@ -1,5 +1,8 @@
 import os
 import sys
+import uuid
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import pytest
 
@@ -22,3 +25,24 @@ def spark():
 @pytest.fixture()
 def tmp_table_root(tmp_path):
     return str(tmp_path / "tbl")
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``with count_jobs() as jobs: ...`` runs the body under a fresh
+    Spark job group; ``jobs.n`` is the number of jobs it launched."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def counting():
+        group = f"counted-{uuid.uuid4().hex}"
+        jobs = SimpleNamespace(n=None)
+        sc.setJobGroup(group, "counted")
+        try:
+            yield jobs
+        finally:
+            sc._jsc.clearJobGroup()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return counting

@@ -56,35 +56,44 @@ def test_replicate_incremental_skips_existing(spark, src_dst):
     assert dst.read().count() == 150
 
 
-def test_verify_catches_corruption(spark, src_dst):
+def test_verify_catches_corruption(spark, src_dst, count_jobs):
     """≙ StateReconciler: size mismatch must fail promotion, mirror stays
-    on its previous visible snapshot."""
+    on its previous visible snapshot.  The check runs in the driver
+    process: no Spark job."""
     src, dst = src_dst
     src.create(make_df(spark, 0, 100))
     todo = R.plan(src, dst)
     R.copy_files(spark, src.root, dst.root, todo)
     # corrupt one replicated file
-    victim = os.path.join(dst.root, todo[0].path)
-    with open(victim, "ab") as f:
+    victim = todo[0]
+    with open(os.path.join(dst.root, victim.path), "ab") as f:
         f.write(b"x")
     staged = dst._make_snapshot(
         "append", src.current_snapshot().manifest, "id BIGINT", staged=True
     )
     dst._commit(staged)
-    with pytest.raises(R.VerificationError, match="size mismatch"):
+    with count_jobs() as launched, pytest.raises(R.VerificationError) as err:
         R.verify(dst, staged)
+    assert launched.n == 0
+    assert str(err.value) == (
+        f"size mismatch for {victim.path}: "
+        f"expected {victim.size_bytes}, got {victim.size_bytes + 1}"
+    )
     assert dst.current_snapshot() is None  # nothing promoted
 
 
-def test_verify_missing_file(spark, src_dst):
+def test_verify_missing_file(spark, src_dst, count_jobs):
     src, dst = src_dst
     src.create(make_df(spark, 0, 10))
-    staged = dst._make_snapshot(
-        "append", src.current_snapshot().manifest, "id BIGINT", staged=True
-    )
+    manifest = src.current_snapshot().manifest
+    staged = dst._make_snapshot("append", manifest, "id BIGINT", staged=True)
     dst._commit(staged)
-    with pytest.raises(R.VerificationError, match="missing"):
+    with count_jobs() as launched, pytest.raises(R.VerificationError) as err:
         R.verify(dst, staged)
+    assert launched.n == 0
+    assert str(err.value) == "; ".join(
+        sorted(f"missing replicated file: {f.path}" for f in manifest)
+    )
 
 
 def test_sampled_l0_verification(spark, src_dst):
@@ -144,23 +153,28 @@ def test_replicate_schema_evolved_table(spark, src_dst):
     assert sorted(r.id for r in out.collect()) == list(range(80))
 
 
-def test_verify_catches_same_size_corruption(spark, src_dst):
+def test_verify_catches_same_size_corruption(spark, src_dst, count_jobs):
     """Byte flip that preserves file size: size check passes, the md5
-    (ETag) tier must catch it and block promotion."""
+    (ETag) tier must catch it and block promotion, with no Spark job."""
     src, dst = src_dst
     src.create(make_df(spark, 0, 100))
     todo = R.plan(src, dst)
     R.copy_files(spark, src.root, dst.root, todo)
-    victim = os.path.join(dst.root, todo[0].path)
-    data = bytearray(open(victim, "rb").read())
+    victim = todo[0]
+    full = os.path.join(dst.root, victim.path)
+    data = bytearray(open(full, "rb").read())
     data[len(data) // 2] ^= 0xFF  # flip one byte, same size
-    open(victim, "wb").write(bytes(data))
+    open(full, "wb").write(bytes(data))
     staged = dst._make_snapshot(
         "append", src.current_snapshot().manifest, "id BIGINT", staged=True
     )
     dst._commit(staged)
-    with pytest.raises(R.VerificationError, match="checksum mismatch"):
+    with count_jobs() as launched, pytest.raises(R.VerificationError) as err:
         R.verify(dst, staged)
+    assert launched.n == 0
+    assert str(err.value) == (
+        f"checksum mismatch for {victim.path}: content differs from manifest md5"
+    )
     assert dst.current_snapshot() is None  # promotion blocked
 
 
@@ -175,6 +189,8 @@ def test_async_copy_completes(spark, src_dst):
     metrics = job.wait(timeout=120)
     assert job.status() == "completed"
     assert metrics.files_copied == len(todo)
+    assert metrics.bytes_copied == sum(f.size_bytes for f in todo)
+    assert metrics.files_skipped == 0
     for f in todo:
         assert os.path.exists(os.path.join(dst.root, f.path))
 

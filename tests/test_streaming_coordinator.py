@@ -153,8 +153,8 @@ def test_replication_stream_rate_adaptation(spark, tmp_path):
 
 
 def test_copy_files_concurrency_cap(spark, tmp_path):
-    """The controller's budget actuates the copy fan-out: concurrency=1
-    still copies everything (correctness unaffected by throttling)."""
+    """The controller's budget reaches the copy: concurrency=1 still
+    copies everything (correctness unaffected by throttling)."""
     from iceberg_hybrid_spark.lake import replication as R
     from iceberg_hybrid_spark.lake.table import HyTable as HT
 

@@ -58,6 +58,36 @@ def test_write_sync_read_workflow(spark, coordinator):
     )
 
 
+@pytest.mark.parametrize("target_catalog", ["prebuilt", "absent"])
+def test_metadata_sync_registers_the_mirror_it_writes(spark, coordinator, target_catalog):
+    """The placement MetadataSync registers is the directory the mirror
+    is written to, whether the target catalog already holds the table
+    or the coordinator opens it."""
+    table = "analytics.user_events"
+    if target_catalog == "absent":
+        del coordinator.catalogs["eu-west-1"]
+    df = spark.range(0, 500).selectExpr("CAST(id AS STRING) AS user_id", "'click' AS event_type")
+    coordinator.coordinate_write(table, df, "us-east-1")
+    assert coordinator.process_pending_events("eu-west-1").failed == 0
+    mirror = coordinator.catalogs["eu-west-1"][table]
+    assert coordinator.registry.get_table_data_path(table, "eu-west-1") == mirror.root
+    assert sorted(mirror.read().collect()) == sorted(df.collect())
+
+
+def test_small_commit_drain_launches_no_spark_jobs(spark, coordinator, count_jobs):
+    """A small commit's copy and verify run in the driver process: the
+    drain (plan → copy → shadow-commit → verify → promote) submits no
+    Spark job."""
+    table = "analytics.user_events"
+    df = spark.range(0, 500).selectExpr("CAST(id AS STRING) AS user_id", "'click' AS event_type")
+    coordinator.coordinate_write(table, df, "us-east-1")
+    with count_jobs() as jobs:
+        progress = coordinator.process_pending_events("eu-west-1")
+    assert progress.successful == 2 and progress.failed == 0
+    assert jobs.n == 0
+    assert coordinator.catalogs["eu-west-1"][table].read().count() == 500
+
+
 def test_multiple_appends_sync_incrementally(spark, coordinator):
     table = "analytics.user_events"
 
