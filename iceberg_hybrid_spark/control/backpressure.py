@@ -10,9 +10,12 @@ should engage.  Policy mirrors the doc:
 - lag beyond the hard limit → write-side gating (slow the producer);
 - newest-snapshot-first prioritization is exposed as a sort key helper.
 
-This is the driver-side control loop; the knob it actuates in Spark is
-``maxFilesPerTrigger`` (streaming.read_event_stream) or the plan()'d batch
-size for batch replication.
+This is the driver-side control loop.  The replication stream
+(``streaming.sync_stream.start_replication_stream``) ticks it per drained
+commit and exposes ``RateController.gate_writes`` as the write-side gating
+signal; that is the only output anything acts on.  The concurrency budget
+is computed and kept in ``RateController.decisions`` but drives no copy:
+replication copies one file at a time in the driver.
 """
 
 from __future__ import annotations

@@ -285,7 +285,7 @@ class MultiRegionCoordinator:
         src = self.catalogs[ev.source_region][ev.table]
         dst = self.catalogs[ev.target_region][ev.table]
         src_seq = src.snapshot_by_id(ev.commit_id).sequence_number
-        _, metrics = replicate(self.spark, src, dst, target_seq=src_seq)
+        _, metrics = replicate(src, dst, target_seq=src_seq)
         return metrics
 
     def retry_failed_events(self) -> int:

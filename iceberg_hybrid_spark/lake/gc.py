@@ -31,16 +31,20 @@ GRACE_S = 7 * 86_400
 # Tiered orphan grace (iceberg-arch-geo-distributed-ha.md:838-852):
 # orphans are judged more conservatively than unreachable files
 # (grace_period_orphan P14D), except recognized temp/staging prefixes
-# (`_tmp/`, `_staging/`, `compaction/tmp/`), cleaned first under the
-# shorter grace_period_orphan_tmp (P3D).
+# (`_tmp/`, `_staging/`, `compaction/tmp/`) and a killed copy's
+# `.inprogress` temp file, cleaned first under the shorter
+# grace_period_orphan_tmp (P3D).
 ORPHAN_GRACE_S = 14 * 86_400
 ORPHAN_TMP_GRACE_S = 3 * 86_400
 _TMP_PREFIXES = ("_tmp/", "_staging/", "compaction/tmp/")
 
 
 def orphan_grace_s(rel_path: str) -> int:
-    """Grace tier for an orphan: P3D when any path segment starts a
-    temp/staging prefix, else the conservative P14D."""
+    """Grace tier for an orphan: P3D for a copy's ``.inprogress`` temp
+    file or when any path segment starts a temp/staging prefix, else the
+    conservative P14D."""
+    if rel_path.endswith(".inprogress"):
+        return ORPHAN_TMP_GRACE_S
     parts = rel_path.split("/")
     for i in range(len(parts)):
         tail = "/".join(parts[i:]) + "/"

@@ -12,19 +12,17 @@ Spark-first re-expression of the reference's replica pipeline:
                         — every file must exist with matching size), then
                         atomic promote (setVisibility ≙ WAP publish).
 
-Where the per-file work runs: ``copy_files``, ``verify`` and
-``audit_closure`` copy, stat and hash in the driver process, one file
-at a time.  A typical commit carries a couple of files, and a Spark
+Where the per-file work runs: all of it (``copy_files``, the
+``CopyJob`` thread, ``verify`` and ``audit_closure``) copies, stats and
+hashes in the driver process, one file at a time; replication launches
+no Spark job.  A typical commit carries a couple of files, and a Spark
 job's fixed cost dwarfs that work: on a 4-vCPU host with local[2] a
 trivial two-task Python-RDD job costs ~520 ms of CPU (264-306 ms wall),
 most of it the Python workers' per-task set-up, while the driver copies
 two ~60 KB files in 0.8 ms and md5-checks 16 files (314 KB) in 1.1 ms.
 The driver already stats destination files (``plan``) and md5s every
 new file (``HyTable._write_data_files``), so it needs no access it
-lacks.  ``CopyJob`` / ``copy_files_async`` run the same per-file body
-(``_copy_partition``) as a Spark job, because their ``cancel()`` works
-by cancelling the job group; its tasks import this module on the
-workers, so the package must be importable there.
+lacks.
 
 Path localization: manifests store table-relative paths, so replicating a
 snapshot to another region's root *is* the base-path rewrite of
@@ -36,11 +34,10 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import time
+import uuid
 from dataclasses import dataclass
-from functools import partial
-
-from pyspark.sql import SparkSession
 
 from .table import DataFileRef, HyTable, Snapshot, file_md5
 
@@ -92,201 +89,105 @@ def plan(src: HyTable, dst: HyTable, target_seq: int | None = None) -> list[Data
     return todo
 
 
-def _copy_partition(pairs, throttle_s: float = 0.0):
-    """Copy (src, dst) pairs one file at a time, each through a tmp file
-    and an atomic rename; yields one (files, bytes) tuple, so the async
-    copy's collect returns O(partitions) tuples, never per-file rows.
-    ``throttle_s`` sleeps per file."""
-    copied = 0
-    nbytes = 0
-    for s, d in pairs:
-        if throttle_s:
-            time.sleep(throttle_s)
-        os.makedirs(os.path.dirname(d), exist_ok=True)
-        tmp = d + ".inprogress"
-        shutil.copyfile(s, tmp)
-        os.replace(tmp, d)  # atomic visibility per file
-        copied += 1
-        nbytes += os.path.getsize(d)
-    yield (copied, nbytes)
+def _copy_file(src: str, dst: str) -> int:
+    """Copy one file through a tmp file and an atomic rename; returns
+    the bytes written.  A process killed mid-file leaves the
+    ``.inprogress`` tmp file, which GC reclaims as a P3D temp orphan."""
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    tmp = dst + ".inprogress"
+    shutil.copyfile(src, tmp)
+    os.replace(tmp, dst)  # atomic visibility per file
+    return os.path.getsize(dst)
 
 
 def _pairs(src_root: str, dst_root: str, refs: list[DataFileRef]) -> list[tuple[str, str]]:
     return [(os.path.join(src_root, r.path), os.path.join(dst_root, r.path)) for r in refs]
 
 
-def _metrics(results, n_refs: int, t0: float) -> ReplicationMetrics:
-    files = sum(r[0] for r in results)
-    nbytes = sum(r[1] for r in results)
-    return ReplicationMetrics(files, nbytes, n_refs - files, int((time.time() - t0) * 1000))
-
-
-def _distributed_copy(
-    spark: SparkSession,
-    src_root: str,
-    dst_root: str,
-    refs: list[DataFileRef],
-    throttle_s: float = 0.0,
-) -> ReplicationMetrics:
-    """Per-file copy fanned out over executors as a parallelized task
-    list (per-partition imperative IO is the one legitimate RDD use).
-    On a real cluster each task streams bytes region→region; locally
-    it's a filesystem copy."""
-    t0 = time.time()
-    if not refs:
-        return ReplicationMetrics(0, 0, 0, 0)
-    pairs = _pairs(src_root, dst_root, refs)
-    n_slices = max(1, min(len(pairs), spark.sparkContext.defaultParallelism))
-    results = (
-        spark.sparkContext.parallelize(pairs, n_slices)
-        .mapPartitions(partial(_copy_partition, throttle_s=throttle_s))
-        .collect()
-    )
-    return _metrics(results, len(refs), t0)
-
-
-def copy_files(
-    spark: SparkSession,
-    src_root: str,
-    dst_root: str,
-    refs: list[DataFileRef],
-    concurrency: int | None = None,
-) -> ReplicationMetrics:
+def copy_files(src_root: str, dst_root: str, refs: list[DataFileRef]) -> ReplicationMetrics:
     """Per-file copy (≙ the per-file fan-out of
     SyncOrchestrator.processDataSync, ZIO.foreachPar over files, :111),
-    run in this process one file at a time.
-
-    ``concurrency`` is the copy budget the backpressure controller sets
-    (RateController.tick → BackpressureDecision.concurrency); one
-    sequential copy stream is within any budget, so it changes nothing
-    here.  ``spark`` is unused; both stay for the callers.
-    """
+    run in this process one file at a time."""
     t0 = time.time()
-    return _metrics(list(_copy_partition(_pairs(src_root, dst_root, refs))), len(refs), t0)
+    nbytes = sum(_copy_file(s, d) for s, d in _pairs(src_root, dst_root, refs))
+    return ReplicationMetrics(len(refs), nbytes, 0, int((time.time() - t0) * 1000))
 
 
 class CopyJob:
-    """Cancellable handle over an in-flight distributed copy
+    """Cancellable handle over an in-flight copy
     (≙ StoragePort.copyFileAsync / getCopyJobStatus / cancelCopyJob,
     StoragePort.scala:58-69).
 
-    The copy runs in a daemon thread under a dedicated Spark job group
-    (interrupt-on-cancel); ``cancel()`` cancels the group, aborting the
-    running stages.  So it runs on executors, unlike ``copy_files``: a
-    copy in the driver process could not be cancelled.  Per-file
-    writes stay atomic (tmp + rename), so a cancelled job leaves no torn
-    files and a re-run is a plain skip-if-exists resync.  States:
-    pending → running → completed | failed | cancelled.
+    The copy runs in a daemon thread of this process, one file at a time
+    through the same per-file body as ``copy_files``.  ``cancel()`` sets
+    an event the thread checks before each file, so the job stops at a
+    file boundary: every file it wrote is complete (tmp + rename), none
+    is left ``.inprogress``, and a re-run is a plain skip-if-exists
+    resync.  States: pending → running → completed | failed | cancelled.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        src_root: str,
-        dst_root: str,
-        refs: list[DataFileRef],
-        throttle_s: float = 0.0,
-    ):
-        import threading
-        import uuid
-
+    def __init__(self, src_root: str, dst_root: str, refs: list[DataFileRef]):
         self.job_id = f"copy-{uuid.uuid4().hex[:12]}"
-        self._spark = spark
-        self._dst_root = dst_root
-        self._refs = list(refs)
-        self.files_to_copy = len(self._refs)
-        self.bytes_to_copy = sum(r.size_bytes for r in self._refs)
+        self.files_to_copy = len(refs)
+        self.bytes_to_copy = sum(r.size_bytes for r in refs)
+        self._files_copied = 0
+        self._bytes_copied = 0
         self._metrics: ReplicationMetrics | None = None
         self._error: Exception | None = None
-        self._cancelled = False
+        self._cancel = threading.Event()
         self._state = "pending"
-        # progress() only trusts destination files written at/after this
-        # instant — stale outputs of a prior failed/cancelled job (same
-        # path, same size) must not count as this job's progress.
-        self._started_at = time.time()
         self._lock = threading.Lock()
         self._thread = threading.Thread(
-            target=self._run, args=(src_root, dst_root, refs, throttle_s), daemon=True
+            target=self._run, args=(_pairs(src_root, dst_root, refs),), daemon=True
         )
         self._thread.start()
 
-    def _run(self, src_root, dst_root, refs, throttle_s):
+    def _run(self, pairs):
         with self._lock:
-            if self._cancelled:
+            if self._cancel.is_set():
                 return
             self._state = "running"
+        t0 = time.time()
         try:
-            # Pinned-thread mode: the job group is scoped to this thread's
-            # submissions only — cancelJobGroup kills just this copy.
-            self._spark.sparkContext.setJobGroup(
-                self.job_id, f"async copy {self.job_id}", interruptOnCancel=True
-            )
-            m = _distributed_copy(
-                self._spark, src_root, dst_root, refs, throttle_s=throttle_s
-            )
+            for s, d in pairs:
+                if self._cancel.is_set():
+                    return
+                nbytes = _copy_file(s, d)
+                with self._lock:
+                    self._files_copied += 1
+                    self._bytes_copied += nbytes
+        except Exception as exc:
             with self._lock:
-                if not self._cancelled:
-                    self._metrics = m
-                    self._state = "completed"
-        except Exception as exc:  # cancelled stages surface as Py4J errors
-            with self._lock:
-                if not self._cancelled:
+                if not self._cancel.is_set():
                     self._error = exc
                     self._state = "failed"
+            return
+        with self._lock:
+            if not self._cancel.is_set():
+                self._metrics = ReplicationMetrics(
+                    self._files_copied, self._bytes_copied, 0,
+                    int((time.time() - t0) * 1000),
+                )
+                self._state = "completed"
 
     def status(self) -> str:
         with self._lock:
             return self._state
 
     def progress(self) -> dict:
-        """Live byte-level progress while the copy is in flight
-        (≙ CopyJob.scala:6-36 — bytesToCopy/bytesCopied/progress %).
-
-        Each file copy lands via an atomic tmp+rename, so statting the
-        destination paths counts exactly the files whose copy has
-        *finished* — monotone, torn-file-free, and identical on a shared
-        object store where the driver lists the destination prefix.
-        A size match alone is not trusted: the file must also have been
-        modified at/after this job started, so stale same-sized leftovers
-        of an earlier failed/cancelled job never inflate progress_pct.
-        The mtime cutoff makes IN-FLIGHT progress conservative under
-        clock skew or coarse store timestamps (a genuinely-copied file
-        may be momentarily uncounted — never overcounted); a COMPLETED
-        job short-circuits to its executor-reported metrics, so the
-        terminal report is exact regardless of clocks.  O(files) stats
-        per poll (manifest-sized control-plane traffic, no data-plane
-        bytes through the driver)."""
+        """Live byte-level progress (≙ CopyJob.scala:6-36 —
+        bytesToCopy/bytesCopied/progress %).  The copy thread counts each
+        file after its rename, so the counters are exact and monotone:
+        they never include a half-written file, nor a same-sized file an
+        earlier job left at the destination."""
         with self._lock:
-            if self._state == "completed" and self._metrics is not None:
-                return {
-                    "state": "completed",
-                    "files_copied": self._metrics.files_copied,
-                    "files_to_copy": self.files_to_copy,
-                    "bytes_copied": self._metrics.bytes_copied,
-                    "bytes_to_copy": self.bytes_to_copy,
-                    "progress_pct": 100.0,
-                }
-        done_files = 0
-        done_bytes = 0
-        # small slack for coarse filesystem timestamp granularity
-        cutoff = self._started_at - 0.01
-        for r in self._refs:
-            full = os.path.join(self._dst_root, r.path)
-            if (
-                os.path.exists(full)
-                and os.path.getsize(full) == r.size_bytes
-                and os.path.getmtime(full) >= cutoff
-            ):
-                done_files += 1
-                done_bytes += r.size_bytes
-        pct = (
-            100.0 if not self.bytes_to_copy else 100.0 * done_bytes / self.bytes_to_copy
-        )
+            state, files, nbytes = self._state, self._files_copied, self._bytes_copied
+        pct = 100.0 if not self.bytes_to_copy else 100.0 * nbytes / self.bytes_to_copy
         return {
-            "state": self.status(),
-            "files_copied": done_files,
+            "state": state,
+            "files_copied": files,
             "files_to_copy": self.files_to_copy,
-            "bytes_copied": done_bytes,
+            "bytes_copied": nbytes,
             "bytes_to_copy": self.bytes_to_copy,
             "progress_pct": round(pct, 2),
         }
@@ -297,12 +198,8 @@ class CopyJob:
         with self._lock:
             if self._state in ("completed", "failed", "cancelled"):
                 return False
-            self._cancelled = True
+            self._cancel.set()
             self._state = "cancelled"
-        try:
-            self._spark.sparkContext.cancelJobGroup(self.job_id)
-        except Exception:
-            pass
         return True
 
     def wait(self, timeout: float | None = None) -> ReplicationMetrics | None:
@@ -318,16 +215,10 @@ class CopyJob:
 _COPY_JOBS: dict[str, CopyJob] = {}
 
 
-def copy_files_async(
-    spark: SparkSession,
-    src_root: str,
-    dst_root: str,
-    refs: list[DataFileRef],
-    throttle_s: float = 0.0,
-) -> CopyJob:
-    """≙ StoragePort.copyFileAsync: start a distributed copy, return a
-    pollable/cancellable handle registered for lookup by id."""
-    job = CopyJob(spark, src_root, dst_root, refs, throttle_s)
+def copy_files_async(src_root: str, dst_root: str, refs: list[DataFileRef]) -> CopyJob:
+    """≙ StoragePort.copyFileAsync: start a copy in a background thread,
+    return a pollable/cancellable handle registered for lookup by id."""
+    job = CopyJob(src_root, dst_root, refs)
     _COPY_JOBS[job.job_id] = job
     return job
 
@@ -441,11 +332,7 @@ def audit_closure(table: HyTable, checksums: bool = True) -> dict:
 
 
 def replicate(
-    spark: SparkSession,
-    src: HyTable,
-    dst: HyTable,
-    target_seq: int | None = None,
-    concurrency: int | None = None,
+    src: HyTable, dst: HyTable, target_seq: int | None = None
 ) -> tuple[Snapshot | None, ReplicationMetrics]:
     """Full pipeline: plan → copy → staged shadow-commit → verify → promote.
 
@@ -461,7 +348,7 @@ def replicate(
     if src_snap is None:
         return None, ReplicationMetrics(0, 0, 0, 0)
     todo = plan(src, dst, target_seq)
-    metrics = copy_files(spark, src.root, dst.root, todo, concurrency=concurrency)
+    metrics = copy_files(src.root, dst.root, todo)
 
     # Shadow-commit the source manifest at the destination (staged).
     # The summary must carry the source's partition spec / evolved schema

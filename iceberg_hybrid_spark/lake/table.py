@@ -2100,14 +2100,16 @@ class HyTable:
     def orphan_files(self) -> list[str]:
         """Files under data/ referenced by NO snapshot — the doc's
         `Orphan ≈ Inventory − Reachable` (doc :886-899).  Inventory here
-        is a filesystem walk; on S3 it would be the Inventory parquet."""
+        is a filesystem walk; on S3 it would be the Inventory parquet.
+        A copy killed mid-file leaves its ``<file>.parquet.inprogress``
+        temp file, which is listed too."""
         reachable = {f.path for s in self.snapshots() for f in s.manifest}
         orphans = []
         for dirpath, _, files in os.walk(self.data_dir):
             for fn in files:
                 full = os.path.join(dirpath, fn)
                 rel = os.path.relpath(full, self.root)
-                if rel not in reachable and fn.endswith(".parquet"):
+                if rel not in reachable and fn.endswith((".parquet", ".parquet.inprogress")):
                     orphans.append(rel)
         return sorted(orphans)
 

@@ -1165,7 +1165,7 @@ def verify_promote_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.overwrite(nation.filter(F.col("n_regionkey") < 3))      # seq 3
 
     dst = HyTable(spark, _scratch("vpo_dst"))
-    promoted, _metrics = R.replicate(spark, src, dst)
+    promoted, _metrics = R.replicate(src, dst)
     replica_rows = dst.read().count()
 
     # L0 sampled + L1 full-checksum verify on the source head: green

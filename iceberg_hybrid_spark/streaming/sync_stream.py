@@ -205,15 +205,15 @@ def start_replication_stream(
     the checkpoint tracks consumed notification files, and replication
     itself is idempotent (skip-if-exists + staged promote).
 
-    ``controller`` (a ``control.backpressure.RateController``) makes the
-    drain rate-adaptive per iceberg-arch-hybrid-replica-dr.md:172-185:
-    before each replicate the controller is ticked with the last copy's
-    failure rate and the observed mirror lag (now − source commit
-    timestamp); the resulting concurrency budget is passed to
-    ``replicate`` (whose in-process copy is one stream, within any
-    budget), and ``controller.gate_writes`` exposes the write-side gating signal
-    for producers to honor.  Without a controller the drain is
-    fixed-rate, as before.
+    ``controller`` (a ``control.backpressure.RateController``) runs the
+    control loop of iceberg-arch-hybrid-replica-dr.md:172-185: before
+    each replicate it is ticked with the last copy's failure rate and the
+    observed mirror lag (now − source commit timestamp), and
+    ``controller.gate_writes`` exposes the write-side gating signal for
+    producers to honor; the tick's decision (backoff / recovery, kept in
+    ``controller.decisions``) is recorded, not applied to the copy, which
+    runs one file at a time in the driver.  A failed replicate records a
+    failure on the controller, so the retry's tick backs off.
     """
     from ..lake.replication import replicate
 
@@ -231,18 +231,12 @@ def start_replication_stream(
         )
         for row in work:
             src, dst = resolve(row.table_name)
-            concurrency = None
             if controller is not None:
                 snap = src.snapshot_by_seq(row.target_seq)
                 lag_s = max(0.0, time.time() - snap.timestamp_ms / 1000.0)
-                concurrency = controller.tick(
-                    controller.last_failure_rate, lag_s
-                ).concurrency
+                controller.tick(controller.last_failure_rate, lag_s)
             try:
-                replicate(
-                    spark, src, dst, target_seq=row.target_seq,
-                    concurrency=concurrency,
-                )
+                replicate(src, dst, target_seq=row.target_seq)
             except Exception:
                 # A failed copy/verify raises (per-file results don't
                 # surface) — record a 100% failure observation on the

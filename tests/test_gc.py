@@ -101,37 +101,47 @@ def test_candidate_and_execution_dfs(spark, tmp_table_root):
 
 def test_tiered_orphan_grace(spark, tmp_table_root):
     """Doc :838-852: a 5-day-old `_tmp/` orphan (P3D tier) is deletable
-    while a same-age data orphan (P14D tier) is still protected."""
+    while a same-age data orphan (P14D tier) is still protected.  A
+    killed copy's `.inprogress` temp file is in the P3D tier too: due
+    at 4 days old, deferred at 1 hour old."""
     t = setup_table_with_garbage(spark, tmp_table_root)
-    five_days_ago = time.time() - 5 * 86_400
     tmp_dir = os.path.join(t.data_dir, "_tmp")
     os.makedirs(tmp_dir)
     tmp_orphan = os.path.join(tmp_dir, "partial.parquet")
     data_orphan = os.path.join(t.data_dir, "stray.parquet")
-    for path in (tmp_orphan, data_orphan):
+    old_copy = os.path.join(t.data_dir, "killed-copy.parquet.inprogress")
+    new_copy = os.path.join(t.data_dir, "live-copy.parquet.inprogress")
+    for path, age_s in ((tmp_orphan, 5 * 86_400), (data_orphan, 5 * 86_400),
+                        (old_copy, 4 * 86_400), (new_copy, 3_600)):
         with open(path, "wb") as f:
             f.write(b"junk")
-        os.utime(path, (five_days_ago, five_days_ago))
+        then = time.time() - age_s
+        os.utime(path, (then, then))
 
     now = int(time.time() * 1000)
     gen = now - 400_000
     cands = [c for c in G.produce_candidates(t, retain_last=2, now_ms=gen)
              if c.reason == "orphan"]
-    assert len(cands) == 2
+    assert len(cands) == 4
     plan = G.DeletePlan(t.root, cands, generated_at_ms=gen,
                         valid_from_ms=gen, valid_until_ms=now + 10**7)
     by_file = {e.file_uri: e.result
                for e in G.apply_delete_plan(plan, safety_delay_s=60, now_ms=now)}
     assert by_file["data/_tmp/partial.parquet"] == "deleted"
     assert by_file["data/stray.parquet"] == "blocked_window"
+    assert by_file["data/killed-copy.parquet.inprogress"] == "deleted"
+    assert by_file["data/live-copy.parquet.inprogress"] == "blocked_window"
     assert not os.path.exists(tmp_orphan)
     assert os.path.exists(data_orphan)
+    assert not os.path.exists(old_copy)
+    assert os.path.exists(new_copy)
 
 
 def test_orphan_grace_tiers():
     assert G.orphan_grace_s("data/_tmp/x.parquet") == G.ORPHAN_TMP_GRACE_S
     assert G.orphan_grace_s("data/_staging/y.parquet") == G.ORPHAN_TMP_GRACE_S
     assert G.orphan_grace_s("data/compaction/tmp/z.parquet") == G.ORPHAN_TMP_GRACE_S
+    assert G.orphan_grace_s("data/part-0.parquet.inprogress") == G.ORPHAN_TMP_GRACE_S
     assert G.orphan_grace_s("data/part-0.parquet") == G.ORPHAN_GRACE_S
     assert G.orphan_grace_s("data/tmpish/f.parquet") == G.ORPHAN_GRACE_S
 

@@ -50,7 +50,7 @@ def test_golden_path(spark, env, tmp_path):
     dst = HyTable(spark, dst_root)
     todo = R.plan(src, dst)
     assert {f.path for f in todo} == {f.path for f in s1.manifest}
-    published, metrics = R.replicate(spark, src, dst)
+    published, metrics = R.replicate(src, dst)
     assert metrics.files_copied == len(todo)
     assert cloud.load_table(table).read().count() == 1000
 

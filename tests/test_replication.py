@@ -13,6 +13,18 @@ def make_df(spark, lo, hi):
     return spark.range(lo, hi).selectExpr("id", "CAST(id AS STRING) AS s")
 
 
+def slow_copies(monkeypatch, before_each):
+    """Run ``before_each()`` ahead of every file the copy writes (a
+    delay, or a wait on an event)."""
+    real = R._copy_file
+
+    def slowed(src, dst):
+        before_each()
+        return real(src, dst)
+
+    monkeypatch.setattr(R, "_copy_file", slowed)
+
+
 @pytest.fixture()
 def src_dst(spark, tmp_path):
     src = HyTable(spark, str(tmp_path / "us_east" / "tbl"))
@@ -32,7 +44,7 @@ def test_replicate_end_to_end(spark, src_dst):
     read routes to the mirror with identical data."""
     src, dst = src_dst
     src.create(make_df(spark, 0, 100))
-    published, metrics = R.replicate(spark, src, dst)
+    published, metrics = R.replicate(src, dst)
     assert published is not None and not published.staged
     assert metrics.files_copied == len(src.current_snapshot().manifest)
     assert metrics.bytes_copied > 0
@@ -46,12 +58,12 @@ def test_replicate_incremental_skips_existing(spark, src_dst):
     """Second sync copies only the diff (skip-if-exists dedup)."""
     src, dst = src_dst
     src.create(make_df(spark, 0, 100))
-    R.replicate(spark, src, dst)
+    R.replicate(src, dst)
     src.append(make_df(spark, 100, 150))
     n_total = len(src.current_snapshot().manifest)
     todo = R.plan(src, dst)
     assert 0 < len(todo) < n_total  # only the appended files
-    _, metrics = R.replicate(spark, src, dst)
+    _, metrics = R.replicate(src, dst)
     assert metrics.files_copied == len(todo)
     assert dst.read().count() == 150
 
@@ -63,7 +75,7 @@ def test_verify_catches_corruption(spark, src_dst, count_jobs):
     src, dst = src_dst
     src.create(make_df(spark, 0, 100))
     todo = R.plan(src, dst)
-    R.copy_files(spark, src.root, dst.root, todo)
+    R.copy_files(src.root, dst.root, todo)
     # corrupt one replicated file
     victim = todo[0]
     with open(os.path.join(dst.root, victim.path), "ab") as f:
@@ -100,7 +112,7 @@ def test_sampled_l0_verification(spark, src_dst):
     """L0 tier: sampled check passes on a healthy prefix."""
     src, dst = src_dst
     src.create(make_df(spark, 0, 100))
-    R.replicate(spark, src, dst)
+    R.replicate(src, dst)
     R.verify(dst, dst.current_snapshot(), sample_fraction=0.5)  # no raise
 
 
@@ -108,11 +120,11 @@ def test_fast_forward_diff(spark, src_dst):
     """Lagging mirror syncs vK→vN directly, skipping intermediates."""
     src, dst = src_dst
     src.create(make_df(spark, 0, 50))
-    R.replicate(spark, src, dst)
+    R.replicate(src, dst)
     src.append(make_df(spark, 50, 100))
     src.append(make_df(spark, 100, 200))
     src.append(make_df(spark, 200, 300))
-    _, metrics = R.replicate(spark, src, dst)  # one hop to latest
+    _, metrics = R.replicate(src, dst)  # one hop to latest
     assert dst.read().count() == 300
     # files from the first sync were not re-copied
     assert metrics.files_skipped == 0
@@ -128,7 +140,7 @@ def test_replicate_partitioned_table(spark, src_dst):
         spark.range(0, 90).selectExpr("id", "id % 3 AS part"),
         partition_by=["part"],
     )
-    R.replicate(spark, src, dst)
+    R.replicate(src, dst)
     out = dst.read()
     assert "part" in out.columns
     assert sorted((r.id, r.part) for r in out.collect()) == sorted(
@@ -146,7 +158,7 @@ def test_replicate_schema_evolved_table(spark, src_dst):
     src.append(
         spark.range(50, 80).selectExpr("id", "CAST(id AS STRING) AS label")
     )
-    R.replicate(spark, src, dst)
+    R.replicate(src, dst)
     out = dst.read()
     assert "label" in out.columns and "s" not in out.columns
     assert out.count() == 80
@@ -159,7 +171,7 @@ def test_verify_catches_same_size_corruption(spark, src_dst, count_jobs):
     src, dst = src_dst
     src.create(make_df(spark, 0, 100))
     todo = R.plan(src, dst)
-    R.copy_files(spark, src.root, dst.root, todo)
+    R.copy_files(src.root, dst.root, todo)
     victim = todo[0]
     full = os.path.join(dst.root, victim.path)
     data = bytearray(open(full, "rb").read())
@@ -180,13 +192,19 @@ def test_verify_catches_same_size_corruption(spark, src_dst, count_jobs):
 
 def test_async_copy_completes(spark, src_dst):
     """copyFileAsync happy path: pending/running -> completed, metrics
-    identical to the synchronous copy."""
+    identical to the synchronous copy, and no Spark job launched (the
+    copy thread runs outside any job group, so its jobs would show up
+    as ungrouped)."""
     src, dst = src_dst
     src.create(make_df(spark, 0, 100))
     todo = R.plan(src, dst)
-    job = R.copy_files_async(spark, src.root, dst.root, todo)
+    sc = spark.sparkContext
+    ungrouped_before = set(sc.statusTracker().getJobIdsForGroup(None))
+    job = R.copy_files_async(src.root, dst.root, todo)
     assert R.get_copy_job_status(job.job_id) in ("pending", "running", "completed")
     metrics = job.wait(timeout=120)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped_before
     assert job.status() == "completed"
     assert metrics.files_copied == len(todo)
     assert metrics.bytes_copied == sum(f.size_bytes for f in todo)
@@ -195,16 +213,18 @@ def test_async_copy_completes(spark, src_dst):
         assert os.path.exists(os.path.join(dst.root, f.path))
 
 
-def test_async_copy_cancel_in_flight(spark, src_dst):
+def test_async_copy_cancel_in_flight(spark, src_dst, monkeypatch):
     """Cancelling a running copy: status transitions to cancelled, the
-    job stops, and no torn files are left behind."""
+    job stops at a file boundary, and no torn or temp files are left
+    behind."""
     import time as _t
 
     src, dst = src_dst
-    # enough files + per-file throttle that the copy is reliably in flight
+    # enough files + per-file delay that the copy is reliably in flight
     src.create(make_df(spark, 0, 2000).repartition(64))
     todo = R.plan(src, dst)
-    job = R.copy_files_async(spark, src.root, dst.root, todo, throttle_s=0.5)
+    slow_copies(monkeypatch, lambda: _t.sleep(0.5))
+    job = R.copy_files_async(src.root, dst.root, todo)
     deadline = _t.time() + 30
     while job.status() == "pending" and _t.time() < deadline:
         _t.sleep(0.05)
@@ -215,12 +235,17 @@ def test_async_copy_cancel_in_flight(spark, src_dst):
     assert job.status() == "cancelled"
     assert job.cancel() is False  # terminal states are immutable
     # atomic per-file writes: every visible parquet is complete
+    written = []
     for dirpath, _, files in os.walk(dst.root):
         for fn in files:
+            assert not fn.endswith(".inprogress"), fn
             if fn.endswith(".parquet"):
                 rel = os.path.relpath(os.path.join(dirpath, fn), dst.root)
                 ref = next(f for f in todo if f.path == rel)
                 assert os.path.getsize(os.path.join(dirpath, fn)) == ref.size_bytes
+                written.append(rel)
+    assert len(written) < len(todo)  # the job stopped early
+    assert job.progress()["files_copied"] == len(written)
 
 
 def test_audit_closure_clean_report(spark, tmp_path):
@@ -259,19 +284,19 @@ def test_audit_closure_catches_old_snapshot_corruption(spark, tmp_path):
         R.audit_closure(t)
 
 
-def test_copy_job_live_byte_progress(spark, src_dst):
-    """≙ CopyJob.scala bytesToCopy/bytesCopied: polling a throttled
+def test_copy_job_live_byte_progress(spark, src_dst, monkeypatch):
+    """≙ CopyJob.scala bytesToCopy/bytesCopied: polling a slowed
     in-flight job observes monotonically increasing progress with at
     least one reading strictly between 0 and 100%."""
     import time
 
     src, dst = src_dst
-    # > defaultParallelism files so tasks carry >=2 files each and
-    # completions spread over time
+    # many files, each delayed, so completions spread over time
     src.create(make_df(spark, 0, 2000).repartition(40))
     refs = R.plan(src, dst)
     assert len(refs) >= 40
-    job = R.copy_files_async(spark, src.root, dst.root, refs, throttle_s=0.4)
+    slow_copies(monkeypatch, lambda: time.sleep(0.1))
+    job = R.copy_files_async(src.root, dst.root, refs)
     seen = []
     deadline = time.time() + 120
     while job.status() in ("pending", "running") and time.time() < deadline:
@@ -296,12 +321,12 @@ def test_mirror_nightly_audit_and_cdc_tailing(spark, src_dst):
 
     src, dst = src_dst
     src.create(make_df(spark, 0, 100))
-    R.replicate(spark, src, dst)
+    R.replicate(src, dst)
     tailer = ChangelogTailer(dst, from_seq=0)
     b1 = tailer.next_batch().collect()
     assert len(b1) == 100 and all(r._change_type == "insert" for r in b1)
     src.append(make_df(spark, 100, 150))
-    R.replicate(spark, src, dst)
+    R.replicate(src, dst)
     b2 = tailer.next_batch().collect()
     assert {r.id for r in b2} == set(range(100, 150))
     assert all(r._change_type == "insert" for r in b2)
@@ -311,27 +336,29 @@ def test_mirror_nightly_audit_and_cdc_tailing(spark, src_dst):
     assert report["files_checked"] >= len(dst.current_snapshot().manifest)
 
 
-def test_copy_job_progress_ignores_stale_destination_files(spark, src_dst):
+def test_copy_job_progress_ignores_stale_destination_files(
+    spark, src_dst, monkeypatch
+):
     """A same-sized destination file left by a PRIOR job must not count
     toward a new job's progress before the new job actually rewrites it."""
-    import time
+    import threading
 
     src, dst = src_dst
     src.create(make_df(spark, 0, 500).repartition(8))
     refs = R.plan(src, dst)
     assert refs
-    # simulate a prior run's leftovers: copy everything, then backdate
-    first = R.copy_files_async(spark, src.root, dst.root, refs)
+    # simulate a prior run's leftovers: copy everything
+    first = R.copy_files_async(src.root, dst.root, refs)
     assert first.wait(60) is not None
-    past = time.time() - 3600
-    for r in refs:
-        full = os.path.join(dst.root, r.path)
-        os.utime(full, (past, past))
 
-    job = R.copy_files_async(spark, src.root, dst.root, refs, throttle_s=5.0)
-    # throttle keeps every file in flight: nothing re-copied yet, so the
-    # stale (size-matching) leftovers must report 0 progress
+    release = threading.Event()
+    slow_copies(monkeypatch, release.wait)
+    job = R.copy_files_async(src.root, dst.root, refs)
+    # the first file is held back: nothing re-copied yet, so the stale
+    # (size-matching) leftovers must report 0 progress
     early = job.progress()
     assert early["files_copied"] == 0
     assert early["progress_pct"] == 0.0
     job.cancel()
+    release.set()
+    job.wait(60)

@@ -100,7 +100,7 @@ def test_streaming_incremental_and_duplicate_delivery(spark, tmp_path, buses):
 
 def test_replication_stream_rate_adaptation(spark, tmp_path):
     """≙ iceberg-arch-hybrid-replica-dr.md:172-185: the streaming drain
-    is rate-adaptive.  With a hopeless lag bound (hard limit 0 s) the
+    ticks the rate controller.  With a hopeless lag bound (hard limit 0 s) the
     controller engages write-side gating at full copy throttle; with the
     default healthy bounds it reports steady recovery and never gates."""
     from iceberg_hybrid_spark.control.backpressure import (
@@ -150,22 +150,6 @@ def test_replication_stream_rate_adaptation(spark, tmp_path):
     assert not healthy.gate_writes
     assert healthy.decisions[-1].reason == "steady"
     assert healthy.concurrency == 5            # additive recovery toward cap
-
-
-def test_copy_files_concurrency_cap(spark, tmp_path):
-    """The controller's budget reaches the copy: concurrency=1 still
-    copies everything (correctness unaffected by throttling)."""
-    from iceberg_hybrid_spark.lake import replication as R
-    from iceberg_hybrid_spark.lake.table import HyTable as HT
-
-    src = HT(spark, str(tmp_path / "s" / "t"))
-    src.create(spark.range(0, 200).toDF("id").repartition(6))
-    dst = HT(spark, str(tmp_path / "d" / "t"))
-    refs = R.plan(src, dst)
-    assert len(refs) >= 6
-    m = R.copy_files(spark, src.root, dst.root, refs, concurrency=1)
-    assert m.files_copied == len(refs)
-    assert m.files_skipped == 0
 
 
 def test_replication_stream_backoff_on_copy_failure(spark, tmp_path, monkeypatch):
