@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as SPARK_T
 
+from ..session import local_frame
+
 
 class GateDecision(str, Enum):
     PENDING = "Pending"
@@ -133,7 +135,7 @@ class CommitGate:
                     (req.request_id, region, True,
                      None if vote is None else ("approved" if vote else "rejected"))
                 )
-        return self.spark.createDataFrame(rows, self._VOTES_SCHEMA)
+        return local_frame(self.spark, rows, self._VOTES_SCHEMA)
 
     def quorum_df(self) -> DataFrame:
         """Per-request decision computed as the counting aggregation:

@@ -14,6 +14,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as SPARK_T
 
+from ..session import local_frame
+
 
 @dataclass(frozen=True)
 class QueryLease:
@@ -77,4 +79,4 @@ class LeaseStore:
             (l.lease_id, l.table, l.snapshot_seq, l.holder, l.expire_at_ms)
             for l in self._leases.values()
         ]
-        return self.spark.createDataFrame(rows, self._SCHEMA)
+        return local_frame(self.spark, rows, self._SCHEMA)

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as SPARK_T
 
+from ..session import local_frame
+
 ACTIVE = "Active"
 INACTIVE = "Inactive"
 MAINTENANCE = "Maintenance"
@@ -142,7 +144,7 @@ class Registry:
             )
             for r in self._regions.values()
         ]
-        return self.spark.createDataFrame(rows, self._REGIONS_SCHEMA)
+        return local_frame(self.spark, rows, self._REGIONS_SCHEMA)
 
     _PLACEMENTS_SCHEMA = SPARK_T.StructType([
         SPARK_T.StructField("table_name", SPARK_T.StringType()),
@@ -152,7 +154,7 @@ class Registry:
 
     def placements_df(self) -> DataFrame:
         rows = [(t, r, p) for (t, r), p in sorted(self._placements.items())]
-        return self.spark.createDataFrame(rows, self._PLACEMENTS_SCHEMA)
+        return local_frame(self.spark, rows, self._PLACEMENTS_SCHEMA)
 
     def get_table_data_paths_batch(self, requests: DataFrame) -> DataFrame:
         """Bulk point lookups as a broadcast left join

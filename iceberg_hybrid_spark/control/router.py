@@ -23,6 +23,7 @@ from enum import Enum
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .registry import ACTIVE, Registry
 
 
@@ -73,7 +74,8 @@ class ReadRouter:
         SURVEY §2.A's prescribed Spark form."""
         regions = self.registry.regions_df()
         spark = regions.sparkSession
-        health = spark.createDataFrame(
+        health = local_frame(
+            spark,
             [(r, float(h)) for r, h in self.storage_health.items()] or [("__none__", 1.0)],
             "region string, storage_health double",
         )

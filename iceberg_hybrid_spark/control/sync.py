@@ -29,6 +29,7 @@ from pyspark.sql import types as SPARK_T
 
 from ..lake.replication import ReplicationMetrics, replicate
 from ..lake.table import HyTable, Snapshot
+from ..session import local_frame
 from .gate import CommitGate, GateDecision
 from .registry import Registry
 
@@ -178,7 +179,7 @@ class SyncEventStore:
             )
             for e in self._sorted(lambda e: True)
         ]
-        return self.spark.createDataFrame(rows, self._SCHEMA)
+        return local_frame(self.spark, rows, self._SCHEMA)
 
 
 @dataclass

@@ -13,6 +13,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as SPARK_T
 
+from ..session import local_frame
+
 
 @dataclass(frozen=True)
 class ConsistencyToken:
@@ -51,4 +53,4 @@ class TokenStore:
             (t.table, t.high_watermark_ts_ms, t.last_applied_sequence, t.inventory_version)
             for t in self._tokens.values()
         ]
-        return self.spark.createDataFrame(rows, self._SCHEMA)
+        return local_frame(self.spark, rows, self._SCHEMA)

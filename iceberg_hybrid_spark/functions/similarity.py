@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -208,8 +210,8 @@ def ivf_topk(
         for c in ranked[:nprobe]:
             probe_pairs.append((row[query_id_col], c, row["_qv"]))
     spark = assigned.sparkSession
-    probes = spark.createDataFrame(
-        probe_pairs, f"{query_id_col} long, {centroid_col} int, _qv array<double>"
+    probes = local_frame(
+        spark, probe_pairs, f"{query_id_col} long, {centroid_col} int, _qv array<double>"
     )
     scored = (
         assigned.join(F.broadcast(probes), centroid_col)
@@ -378,8 +380,8 @@ def all_pairs_cosine_pairs(
     if not rows:
         # np.stack([]) raises; an empty corpus has an empty pair relation
         # (the behavior of the non-equi-join form this path replaced).
-        return df.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine_sim double"
+        return local_frame(
+            df.sparkSession, [], "id_a long, id_b long, cosine_sim double"
         )
     ids_all = np.array([r[id_col] for r in rows], dtype=np.int64)
     mat = np.stack([np.asarray(r["_v"], dtype=np.float64) for r in rows])
@@ -763,8 +765,8 @@ def _adc_empty(coded: DataFrame, query_id_col: str, id_col: str) -> DataFrame:
     construction in both paths (the non-empty path casts the collected
     literals to long)."""
     id_type = dict(coded.dtypes)[id_col]
-    return coded.sparkSession.createDataFrame(
-        [],
+    return local_frame(
+        coded.sparkSession, [],
         f"{query_id_col} bigint, {id_col} {id_type}, adc_dot double, "
         "rank int",
     )
@@ -1002,7 +1004,7 @@ def pq_write_index(
         for j, book in enumerate(codebooks)
         for c, cv in enumerate(book)
     ]
-    books = codes.sparkSession.createDataFrame(rows, PQ_BOOKS_DDL)
+    books = local_frame(codes.sparkSession, rows, PQ_BOOKS_DDL)
     for table, df in ((codes_table, codes), (books_table, books)):
         if table.current_snapshot() is None:
             table.create(df)
@@ -1056,8 +1058,9 @@ def ivfpq_write_index(
         for c, cv in enumerate(book)
     ]
     spark = codes.sparkSession
-    books = spark.createDataFrame(rows, PQ_BOOKS_DDL)
-    cents = spark.createDataFrame(
+    books = local_frame(spark, rows, PQ_BOOKS_DDL)
+    cents = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
         IVF_CENTERS_DDL,
     )

@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as SPARK_T
 
+from ..session import local_frame
 from .table import HyTable
 
 ONPREM_DELAY_S = 86_400
@@ -145,7 +146,8 @@ _CANDIDATE_SCHEMA = SPARK_T.StructType([
 
 def candidates_df(spark: SparkSession, cands: list[GcCandidate]) -> DataFrame:
     """gc_candidates as a DataFrame (the doc's DDL at :766-786)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(c.file_uri, c.size_bytes, c.produced_at_ms, c.delete_after_ms, c.reason) for c in cands],
         _CANDIDATE_SCHEMA,
     )
@@ -226,7 +228,8 @@ _EXECUTION_SCHEMA = SPARK_T.StructType([
 
 def executions_df(spark: SparkSession, execs: list[GcExecution]) -> DataFrame:
     """gc_executions log (doc :808-818)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(e.file_uri, e.result, e.bytes, e.deleted_at_ms) for e in execs],
         _EXECUTION_SCHEMA,
     )

@@ -50,6 +50,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as SPARK_T
 
+from ..session import local_frame
+
 _META = "_meta"
 _DATA = "data"
 
@@ -661,7 +663,7 @@ class HyTable:
             cur = self.current_snapshot()
             if cur is None:
                 raise NoSuchSnapshot("cannot evolve the spec of an empty table")
-            schema = self.spark.createDataFrame([], cur.schema_ddl).schema
+            schema = SPARK_T.StructType.fromDDL(cur.schema_ddl)
             known = {f.name: f.dataType.simpleString() for f in schema.fields}
             missing = [c for c in identity if c not in known]
             if missing:
@@ -1110,7 +1112,7 @@ class HyTable:
         file) and ``__seq`` (the file's added_seq) — the identity columns
         position deletes and sequence rules need."""
         if not refs:
-            df = self.spark.createDataFrame([], snap.schema_ddl)
+            df = local_frame(self.spark, [], snap.schema_ddl)
             if with_meta:
                 df = (
                     df.withColumn("__file", F.lit(None).cast("string"))
@@ -1138,7 +1140,8 @@ class HyTable:
                 # expressions per file into the plan, which at 100k+
                 # files blows up analysis/codegen; the join stays
                 # manifest-sized no matter the file count
-                seq_rows = self.spark.createDataFrame(
+                seq_rows = local_frame(
+                    self.spark,
                     [
                         (os.path.relpath(p, self.root),
                          seq_by_path[os.path.relpath(p, self.root)])
@@ -1476,7 +1479,7 @@ class HyTable:
     def files(self, seq: int | None = None) -> DataFrame:
         snap = self.snapshot_by_seq(seq) if seq is not None else self.current_snapshot()
         if snap is None:
-            return self.spark.createDataFrame([], self._FILES_SCHEMA)
+            return local_frame(self.spark, [], self._FILES_SCHEMA)
         rows = [
             (
                 f.path, f.size_bytes, f.row_count, snap.sequence_number,
@@ -1484,7 +1487,7 @@ class HyTable:
             )
             for f in snap.manifest
         ]
-        return self.spark.createDataFrame(rows, self._FILES_SCHEMA)
+        return local_frame(self.spark, rows, self._FILES_SCHEMA)
 
     def all_files(self, include_staged: bool = True) -> DataFrame:
         """Every distinct file referenced by ANY snapshot (≙ Iceberg's
@@ -1500,7 +1503,7 @@ class HyTable:
                         f.path, f.size_bytes, f.row_count, s.sequence_number,
                         f.content, f.added_seq, dict(f.partition),
                     )
-        return self.spark.createDataFrame(list(seen.values()), self._FILES_SCHEMA)
+        return local_frame(self.spark, list(seen.values()), self._FILES_SCHEMA)
 
     _PARTITIONS_SCHEMA = SPARK_T.StructType([
         SPARK_T.StructField(
@@ -1526,7 +1529,7 @@ class HyTable:
                 cur[1] += f.row_count
                 cur[2] += f.size_bytes
         rows = [(dict(p), c, r, b) for p, (c, r, b) in agg.items()]
-        return self.spark.createDataFrame(rows, self._PARTITIONS_SCHEMA)
+        return local_frame(self.spark, rows, self._PARTITIONS_SCHEMA)
 
     _MANIFESTS_SCHEMA = SPARK_T.StructType([
         SPARK_T.StructField("snapshot_id", SPARK_T.StringType()),
@@ -1549,7 +1552,7 @@ class HyTable:
                 s.snapshot_id, s.sequence_number, data, dels, added,
                 sum(f.size_bytes for f in s.manifest),
             ))
-        return self.spark.createDataFrame(rows, self._MANIFESTS_SCHEMA)
+        return local_frame(self.spark, rows, self._MANIFESTS_SCHEMA)
 
     _SNAPSHOTS_SCHEMA = SPARK_T.StructType([
         SPARK_T.StructField("snapshot_id", SPARK_T.StringType()),
@@ -1573,7 +1576,7 @@ class HyTable:
             )
             for s in self.snapshots()
         ]
-        return self.spark.createDataFrame(rows, self._SNAPSHOTS_SCHEMA)
+        return local_frame(self.spark, rows, self._SNAPSHOTS_SCHEMA)
 
     def changelog(self, from_seq: int | None, to_seq: int) -> DataFrame:
         """Row-level CDC between two snapshots (≙ Iceberg's changelog
@@ -1647,7 +1650,7 @@ class HyTable:
             SPARK_T.StructField("row_count", SPARK_T.LongType()),
             SPARK_T.StructField("change", SPARK_T.StringType()),
         ])
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     # ---- schema evolution (≙ schema travels with each TableMetadata) -------
     #
@@ -2020,7 +2023,7 @@ class HyTable:
                 rows.append((name, "TAG", h.snapshot_id, h.sequence_number))
             except NoSuchSnapshot:
                 pass
-        return self.spark.createDataFrame(rows, self._REFS_SCHEMA)
+        return local_frame(self.spark, rows, self._REFS_SCHEMA)
 
     # ---- maintenance: expiry + orphans (≙ GC family) -----------------------
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake.table import HyTable
+from ..session import local_frame
 from ..sources.tables import load_table
 from ._ivfpq_oracle import EMBEDDING_IVFPQ_PERSISTED_SQL
 from ._pq_oracle import (
@@ -125,8 +126,8 @@ def merge_upsert_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = load_table(spark, sf_dir, "region").coalesce(1)
     t = HyTable(spark, _scratch("merge"))
     t.create(region.select(F.col("r_regionkey").alias("k"), F.col("r_name").alias("name")))
-    source = spark.createDataFrame(
-        [(0, "REGION_ZERO_UPDATED"), (99, "NEW_REGION")], "k int, name string"
+    source = local_frame(
+        spark, [(0, "REGION_ZERO_UPDATED"), (99, "NEW_REGION")], "k int, name string"
     )
     t.merge(source, ["k"])
     return t.read().orderBy("k")
@@ -254,8 +255,8 @@ def mor_delete_upsert_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = HyTable(spark, _scratch("mor"))
     t.create(nation.select(F.col("n_nationkey").alias("k"), F.col("n_name").alias("name")))
     t.delete_where_mor([("k", "<", 5)], ["k"])
-    source = spark.createDataFrame(
-        [(10, "NATION_TEN_V2"), (200, "NEW_NATION")], "k int, name string"
+    source = local_frame(
+        spark, [(10, "NATION_TEN_V2"), (200, "NEW_NATION")], "k int, name string"
     )
     t.upsert_mor(source, ["k"])
     return t.read().orderBy("k")
@@ -347,9 +348,9 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     inbox = os.path.join(root, "inbox")
     _deliver_twice(docs, inbox)  # full batch + verbatim re-delivery
     corpus = HyTable(spark, os.path.join(root, "corpus"))
-    corpus.create(spark.createDataFrame([], docs.schema))
+    corpus.create(local_frame(spark, [], docs.schema))
     fps = HyTable(spark, os.path.join(root, "fps"))
-    fps.create(spark.createDataFrame([], FINGERPRINT_DDL))
+    fps.create(local_frame(spark, [], FINGERPRINT_DDL))
     schema = SPARK_T2.StructType.fromDDL(
         "doc_id bigint, lang string, text string"
     )
@@ -570,9 +571,9 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     inbox = os.path.join(root, "inbox")
     _deliver_twice(docs, inbox)  # full batch + verbatim re-delivery
     corpus = HyTable(spark, os.path.join(root, "corpus"))
-    corpus.create(spark.createDataFrame([], docs.schema))
+    corpus.create(local_frame(spark, [], docs.schema))
     bands = HyTable(spark, os.path.join(root, "bands"))
-    bands.create(spark.createDataFrame([], BAND_STATE_DDL))
+    bands.create(local_frame(spark, [], BAND_STATE_DDL))
     schema = SPARK_T2.StructType.fromDDL("doc_id bigint, lang string, text string")
     q = start_near_dup_ingest(
         spark, inbox, schema, corpus, bands, os.path.join(root, "ckpt"),
@@ -619,7 +620,7 @@ def streaming_hll_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     inbox = os.path.join(root, "inbox")
     _deliver_twice(docs, inbox)  # full batch + verbatim re-delivery
     registers = HyTable(spark, os.path.join(root, "registers"))
-    registers.create(spark.createDataFrame([], HLL_REGISTER_DDL))
+    registers.create(local_frame(spark, [], HLL_REGISTER_DDL))
     schema = SPARK_T2.StructType.fromDDL(
         "doc_id bigint, lang string, text string"
     )
@@ -722,9 +723,9 @@ def streaming_cms_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     inbox = os.path.join(root, "inbox")
     _deliver_twice(docs, inbox)  # full batch + verbatim re-delivery
     counted = HyTable(spark, os.path.join(root, "counted"))
-    counted.create(spark.createDataFrame([], FINGERPRINT_DDL))
+    counted.create(local_frame(spark, [], FINGERPRINT_DDL))
     cells = HyTable(spark, os.path.join(root, "cells"))
-    cells.create(spark.createDataFrame([], CMS_CELL_DDL))
+    cells.create(local_frame(spark, [], CMS_CELL_DDL))
     schema = SPARK_T2.StructType.fromDDL(
         "doc_id bigint, lang string, text string"
     )
@@ -985,11 +986,12 @@ def backpressure_budget_trajectory(spark: SparkSession, sf_dir: str) -> DataFram
             (int(o.t), float(o.fr), int(o.lag), d.concurrency,
              d.gate_writes, d.reason)
         )
-    return spark.createDataFrame(
-        rows,
+    # rows are built in tick order
+    return local_frame(
+        spark, rows,
         "tick int, failure_rate double, mirror_lag_s bigint, "
         "concurrency int, gate_writes boolean, reason string",
-    ).orderBy("tick")
+    )
 
 
 BACKPRESSURE_TRAJECTORY_SQL = """
@@ -1086,7 +1088,7 @@ def lease_gc_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         safety_delay_s=60,
         now_ms=now,
     )
-    rows = [
+    rows = [  # in metric order
         ("blocked_window_fresh_plan",
          sum(1 for e in fresh if e.result == "blocked_window")),
         ("deleted", sum(1 for e in aged if e.result == "deleted")),
@@ -1096,9 +1098,7 @@ def lease_gc_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("post_gc_leased_rows", t.read(seq=floor).count()),
         ("unguarded_candidates", len(unguarded)),
     ]
-    return spark.createDataFrame(
-        rows, "metric string, value bigint"
-    ).orderBy("metric")
+    return local_frame(spark, rows, "metric string, value bigint")
 
 
 LEASE_GC_FLOOR_SQL = """
@@ -1224,7 +1224,7 @@ def verify_promote_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         safety_delay_s=60,
         now_ms=now,
     )
-    rows = [
+    rows = [  # in metric order
         ("l0_sample_ok", l0_ok),
         ("l1_head_ok", l1_ok),
         ("l1_replica_missing", replica_missing),
@@ -1238,9 +1238,7 @@ def verify_promote_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
          sum(1 for e in execs if e.result == "deleted")),
         ("post_gc_current_rows", src.read().count()),
     ]
-    return spark.createDataFrame(
-        rows, "metric string, value bigint"
-    ).orderBy("metric")
+    return local_frame(spark, rows, "metric string, value bigint")
 
 
 VERIFY_PROMOTE_ORPHANS_SQL = """
@@ -1351,11 +1349,12 @@ def read_route_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_active,
             )
         )
-    return spark.createDataFrame(
-        out,
+    # rows are built in table_group order
+    return local_frame(
+        spark, out,
         "table_group string, preferred string, preferred_active boolean, "
         "chosen string, tier string, chosen_score double, n_active int",
-    ).orderBy("table_group")
+    )
 
 
 READ_ROUTE_SCORES_SQL = """
@@ -1815,7 +1814,7 @@ def tag_mor_pinned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.delete_where_mor([("k", "<", 5)], ["k"])
     t.create_tag("post_delete")
     t.upsert_mor(
-        spark.createDataFrame([(7, "REWRITTEN_LATER")], "k int, name string"), ["k"]
+        local_frame(spark, [(7, "REWRITTEN_LATER")], "k int, name string"), ["k"]
     )
     return t.read_tag("post_delete").orderBy("k")
 
@@ -1889,8 +1888,8 @@ def incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bring the MV to a concrete value BEFORE the table moves on — a
     # materialized view is state, not a lazy plan over a moving table
     # (bounded relation: one row per language)
-    mv = spark.createDataFrame(
-        mv.collect(), "lang string, n_docs bigint, total_chars bigint"
+    mv = local_frame(
+        spark, mv.collect(), "lang string, n_docs bigint, total_chars bigint"
     )
     t.append(docs.filter(F.col("doc_id") % 3 == 1).coalesce(1))
     t.delete_where([("lang", "=", "de")])
@@ -2305,11 +2304,12 @@ def token_route_policies(spark: SparkSession, sf_dir: str) -> DataFrame:
                     stale_rows if m.commit_day > watermark_day else served,
                 )
             )
-    return spark.createDataFrame(
-        out,
+    # rows are built in (commit_seq, policy) order
+    return local_frame(
+        spark, out,
         "commit_seq int, commit_day int, policy string, route string, "
         "caught_up int, served_rows bigint, stale_cloud_rows bigint",
-    ).orderBy("commit_seq", "policy")
+    )
 
 
 TOKEN_ROUTE_POLICIES_SQL = """

@@ -18,6 +18,7 @@ from ..plans.barrier import stop_predicate_pushdown
 from ..functions import similarity as S
 from ..functions import text as T
 from ..functions.text import round_stable
+from ..session import local_frame
 from ..sources.tables import (
     DUCK_DOC_SAMPLE_WHERE_FIXED_SIZE,
     load_table,
@@ -1000,7 +1001,7 @@ def embedding_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFra
         .groupBy("dim", "q_vec_id")
         .agg(F.count(F.lit(1)).alias("hits"))
     )
-    dims = spark.createDataFrame([(8,), (16,), (32,)], "dim int")
+    dims = local_frame(spark, [(8,), (16,), (32,)], "dim int")
     scaffold = dims.crossJoin(
         queries.select(F.col("vec_id").alias("q_vec_id"))
     )

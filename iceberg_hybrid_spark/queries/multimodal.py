@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import round_stable
+from ..session import local_frame
 from ..sources.multimodal import (
     avi_video_features,
     image_resize_features,
@@ -756,10 +757,10 @@ def streaming_frame_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     avis = media_avi_from_documents(docs)
     state = HyTable(spark, os.path.join(root, "state"))
-    state.create(spark.createDataFrame([], FRAME_STATE_DDL))
+    state.create(local_frame(spark, [], FRAME_STATE_DDL))
     report = HyTable(spark, os.path.join(root, "report"))
-    report.create(spark.createDataFrame(
-        [],
+    report.create(local_frame(
+        spark, [],
         "video_id bigint, n_frames bigint, novel_frames bigint,"
         " batch_seq bigint",
     ))

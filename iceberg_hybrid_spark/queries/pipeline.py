@@ -19,6 +19,7 @@ from ..functions import bpe as B
 from ..functions import contamination as C
 from ..functions import sketch as SK
 from ..functions import text as T
+from ..session import local_frame
 from ._bpe_apply_oracle import BPE_APPLY_SQL
 from ._bpe_oracle import BPE_ROUNDS_SQL
 from ..sources.tables import (
@@ -3125,8 +3126,8 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     regenerates)."""
     docs = load_table(spark, sf_dir, "documents")
     rows = B.train_bpe(docs, rounds=6)
-    return spark.createDataFrame(
-        rows, "round int, pair string, pair_count bigint, vocab_size bigint"
+    return local_frame(
+        spark, rows, "round int, pair string, pair_count bigint, vocab_size bigint"
     ).orderBy("round")
 
 

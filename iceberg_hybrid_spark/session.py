@@ -11,11 +11,25 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+# Generated classes Spark's codegen cache keeps (Spark's default is 100).
+# Counted with an unbounded cache on 2 task slots: one pass of the
+# perfbench analytics suite generates 106 distinct classes, so at 100 it
+# recompiled 51 of them on every pass; the whole DuckDB oracle gate (212
+# queries at sf0.01, each run once) generates 3468, and compiles 3868
+# at 1000.  1000 holds a repeated working set ~9x the suite's without
+# keeping every class of a long one-off run.  An entry keeps its
+# generated source (mean 5-8 K chars) and the loaded class (mean
+# 2.1-2.7 KB of bytecode plus its metaspace), so a full cache is
+# ~10-15 MB of driver memory.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -28,6 +42,14 @@ def get_spark(
     At 100 TB the same settings hold: AQE resizes the 2× over-provisioned
     shuffle partitions down at runtime, skewed join partitions are split,
     and small dims broadcast. Only ``master`` is environment-specific.
+
+    Two settings remove fixed per-run costs that are not query work: the
+    codegen cache holds ``CODEGEN_CACHE_ENTRIES`` generated classes, so a
+    repeated query compiles nothing, and file commits write no
+    ``_SUCCESS`` marker (each JVM file create costs a forked ``chmod``
+    without the native Hadoop library, and the marker and its ``.crc``
+    are side files GC never reclaims).  Static settings such as the cache
+    size apply only when this call creates the session.
     """
     cpus = default_parallelism()
     if shuffle_partitions is None:
@@ -64,6 +86,8 @@ def get_spark(
         # codegen'd at the 64x spotcheck; codegen's own 64KB-method
         # splitting handles the wider generated class.
         .config("spark.sql.codegen.maxFields", "200")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cpus}]")
@@ -111,3 +135,38 @@ def reset_broadcast_threshold(spark: SparkSession) -> None:
     spark.conf.set(
         "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
     )
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame over rows held in the driver, as a Spark local relation.
+
+    ``spark.createDataFrame(<list>, schema)`` ships the rows as a Python
+    RDD, so every job that reads the frame (a collect, a join, a write)
+    runs Python worker tasks, each with a fixed worker start-up cost.
+    Here the rows become one Arrow table, which Spark turns into a
+    ``LocalRelation``: collecting it launches no job, and no Python
+    worker runs when it is written or joined.
+
+    Each row (a tuple, list, ``Row`` or dict) is checked against
+    ``schema`` (a ``StructType`` or a DDL string) exactly as
+    ``createDataFrame`` checks it, so a value the schema does not admit
+    raises the same error; values convert with the same rules.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(row))
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*internal) if internal else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

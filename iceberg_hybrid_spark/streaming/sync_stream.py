@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as SPARK_T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import local_frame
+
 EVENT_SCHEMA = SPARK_T.StructType([
     SPARK_T.StructField("event_id", SPARK_T.LongType()),
     SPARK_T.StructField("ts", SPARK_T.TimestampType()),
@@ -304,7 +306,7 @@ def persist_events(store, events_dir: str, events: Iterable | None = None) -> in
         )
         for e in evs
     ]
-    df = store.spark.createDataFrame(rows, store._SCHEMA)
+    df = local_frame(store.spark, rows, store._SCHEMA)
     df.coalesce(1).write.mode("append").parquet(events_dir)
     return len(rows)
 

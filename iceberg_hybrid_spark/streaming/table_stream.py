@@ -37,9 +37,9 @@ def stream_table_appends(spark: SparkSession, table: HyTable) -> DataFrame:
     cur = table.current_snapshot()
     if cur is None:
         raise ValueError("table has no snapshot to infer a schema from")
-    # schema_ddl is a struct simpleString; route through createDataFrame's
-    # parser to get a StructType the streaming reader accepts
-    schema = spark.createDataFrame([], cur.schema_ddl).schema
+    # schema_ddl is a struct simpleString; parse it to the StructType the
+    # streaming reader accepts
+    schema = SPARK_T.StructType.fromDDL(cur.schema_ddl)
     return (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")

@@ -87,11 +87,16 @@ def test_watermark_guard(spark, tmp_table_root):
     assert all(e.result == "blocked_watermark" for e in execs)
 
 
-def test_candidate_and_execution_dfs(spark, tmp_table_root):
+def test_candidate_and_execution_dfs(spark, tmp_table_root, count_jobs):
     t = setup_table_with_garbage(spark, tmp_table_root)
     now = int(time.time() * 1000)
     cands = G.produce_candidates(t, retain_last=1, now_ms=now)
     cdf = G.candidates_df(spark, cands)
+    # a driver-held frame: collecting it runs no Spark job
+    with count_jobs() as jobs:
+        rows = cdf.collect()
+    assert jobs.n == 0
+    assert sorted(r.file_uri for r in rows) == sorted(c.file_uri for c in cands)
     assert cdf.count() == len(cands)
     plan = G.DeletePlan(t.root, cands, now, now, now + 10**7)
     execs = G.apply_delete_plan(plan, safety_delay_s=60, now_ms=now)
@@ -174,3 +179,31 @@ def test_lease_floor_protects_leased_and_newer_snapshots(spark, tmp_table_root):
         c.file_uri
         for c in G.produce_candidates(t, retain_last=1, min_leased_seq=None)
     } == no_floor
+
+
+def test_lease_gc_floor_query_job_budget(spark, count_jobs, tmp_path):
+    """The query's result rows are a driver-held frame built in metric
+    order, so returning them costs no Spark job and no sort: the jobs
+    left are the table writes and reads of its lifecycle (13 when the
+    rows went through a Python RDD and an ``orderBy``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_hybrid_spark.queries.lake_ops import lease_gc_floor
+    from iceberg_hybrid_spark.sources.tables import load_table
+
+    sf_dir = str(tmp_path)
+    pq.write_table(
+        pa.table({
+            "n_nationkey": pa.array(range(25), pa.int32()),
+            "n_name": [f"NATION_{i}" for i in range(25)],
+            "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
+        }),
+        os.path.join(sf_dir, "nation.parquet"),
+    )
+    load_table(spark, sf_dir, "nation")  # its schema read is set-up, not query work
+    with count_jobs() as jobs:
+        rows = lease_gc_floor(spark, sf_dir).collect()
+    assert jobs.n <= 10
+    assert [r.metric for r in rows] == sorted(r.metric for r in rows)
+    assert dict((r.metric, r.value) for r in rows)["post_gc_leased_rows"] == 15

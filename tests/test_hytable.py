@@ -32,6 +32,11 @@ def test_append_accumulates(spark, tmp_table_root):
     assert t.current_snapshot().sequence_number == 2
     # manifest = parent files + new files
     assert len(t.current_snapshot().manifest) > len(t.snapshot_by_seq(1).manifest)
+    # a commit directory holds only data files: no _SUCCESS marker (nor
+    # its .crc) for GC to leave behind
+    for commit_dir in os.listdir(t.data_dir):
+        names = os.listdir(os.path.join(t.data_dir, commit_dir))
+        assert names and not [n for n in names if "_SUCCESS" in n]
 
 
 def test_overwrite_replaces(spark, tmp_table_root):
@@ -59,14 +64,17 @@ def test_time_travel_as_of_timestamp(spark, tmp_table_root):
     assert t.read(as_of_ms=ts_between).count() == 100
 
 
-def test_history_and_files_metadata_tables(spark, tmp_table_root):
+def test_history_and_files_metadata_tables(spark, tmp_table_root, count_jobs):
     t = HyTable(spark, tmp_table_root)
     t.create(make_df(spark, 0, 100))
     t.append(make_df(spark, 100, 150))
-    hist = t.history().collect()
+    # metadata tables are driver-held frames: collecting one runs no job
+    with count_jobs() as jobs:
+        hist = t.history().collect()
+        files = t.files().collect()
+    assert jobs.n == 0
     assert [r.sequence_number for r in hist] == [1, 2]
     assert all(r.total_rows > 0 for r in hist)
-    files = t.files().collect()
     assert sum(f.row_count for f in files) == 150
 
 

@@ -35,7 +35,7 @@ def coordinator(spark, tmp_path):
     return MultiRegionCoordinator(spark, reg, gate, events, catalogs)
 
 
-def test_write_sync_read_workflow(spark, coordinator):
+def test_write_sync_read_workflow(spark, coordinator, count_jobs):
     table = "analytics.user_events"
     df = spark.range(0, 500).selectExpr("CAST(id AS STRING) AS user_id", "'click' AS event_type")
     job, snap = coordinator.coordinate_write(table, df, "us-east-1")
@@ -56,6 +56,12 @@ def test_write_sync_read_workflow(spark, coordinator):
         e.status == COMPLETED
         for e in coordinator.events.get_event_history(table, "eu-west-1")
     )
+    # the event log is a driver-held frame: collecting it runs no Spark job
+    with count_jobs() as jobs:
+        rows = coordinator.events.events_df().collect()
+    assert jobs.n == 0
+    assert sorted(r.event_type for r in rows) == ["DataSync", "MetadataSync"]
+    assert {r.status for r in rows} == {COMPLETED}
 
 
 @pytest.mark.parametrize("target_catalog", ["prebuilt", "absent"])
