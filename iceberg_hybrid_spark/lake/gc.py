@@ -17,13 +17,13 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as SPARK_T
 
 from ..session import local_frame
-from .table import HyTable
+from .table import HyTable, _delete_table_file
 
 ONPREM_DELAY_S = 86_400
 CLOUD_DELAY_S = 172_800
@@ -66,17 +66,13 @@ class GcCandidate:
 @dataclass
 class DeletePlan:
     """≙ legacy DeletePlan(tableId, deleteCandidates, generatedAt,
-    validFrom, validUntil, approvals) + SafetyWindow."""
+    validFrom, validUntil) + SafetyWindow."""
 
     table_root: str
     candidates: list[GcCandidate]
     generated_at_ms: int
     valid_from_ms: int
     valid_until_ms: int
-    approvals: set[str] = field(default_factory=set)
-
-    def approve(self, region: str) -> None:
-        self.approvals.add(region)
 
 
 def produce_candidates(
@@ -193,7 +189,7 @@ def apply_delete_plan(
         full = os.path.join(plan.table_root, c.file_uri)
         if os.path.exists(full):
             size = os.path.getsize(full)
-            os.unlink(full)
+            _delete_table_file(plan.table_root, c.file_uri)
             executions.append(GcExecution(c.file_uri, "deleted", size, now_ms))
         else:
             executions.append(GcExecution(c.file_uri, "missing", 0, now_ms))

@@ -350,24 +350,19 @@ def replicate(
     todo = plan(src, dst, target_seq)
     metrics = copy_files(src.root, dst.root, todo)
 
-    # Shadow-commit the source manifest at the destination (staged).
-    # The summary must carry the source's partition spec / evolved schema
-    # / rename history (HyTable._CARRY_KEYS): partition columns are
-    # stripped from the files by partitionBy and reconstructed at read
-    # time from the summary, so dropping them would lose those columns at
-    # the destination and misread schema-evolved tables.
-    summary = {
-        k: src_snap.summary[k] for k in HyTable._CARRY_KEYS if k in src_snap.summary
-    }
-    summary.update({
-        "replicated_from": src_snap.snapshot_id,
-        "source_seq": src_snap.sequence_number,
-    })
-    staged = dst._make_snapshot(
-        "append", src_snap.manifest, src_snap.schema_ddl, staged=True,
-        summary=summary,
+    # Shadow-commit the source's files and table metadata (staged) in
+    # place of the destination head's: partition columns are rebuilt at
+    # read time from the summary, and evolved schemas need their renames.
+    base = dst.current_snapshot()
+    staged = dst._commit_files(
+        "append",
+        lambda head: (src_snap.schema_ddl, {
+            "replicated_from": src_snap.snapshot_id,
+            "source_seq": src_snap.sequence_number,
+        }),
+        added=src_snap.manifest, removed=base.manifest if base else (), base=base,
+        carry=src_snap, staged=True,
     )
-    dst._commit(staged)
     verify(dst, staged)  # raises on any missing/mismatched file
     published = dst.publish(staged.snapshot_id)
     return published, metrics

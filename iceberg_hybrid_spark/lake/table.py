@@ -38,12 +38,14 @@ driver.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import time
 import uuid
 import zlib
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -280,6 +282,25 @@ def file_md5(path: str) -> str:
     return h.hexdigest()
 
 
+def _delete_table_file(root: str, rel: str) -> bool:
+    """Delete a table file, then what writing it left beside it: Hadoop's
+    ``.<name>.crc`` sidecar and each directory up to ``data/`` that this
+    empties (its commit and partition directories).  Returns whether the
+    file existed; callers count and size only the file itself."""
+    d, name = os.path.split(os.path.abspath(os.path.join(root, rel)))
+    if not os.path.exists(os.path.join(d, name)):
+        return False
+    os.unlink(os.path.join(d, name))
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(os.path.join(d, f".{name}.crc"))
+    stop = os.path.join(os.path.abspath(root), _DATA) + os.sep
+    with contextlib.suppress(OSError):  # stops at the first non-empty one
+        while d.startswith(stop):
+            os.rmdir(d)
+            d = os.path.dirname(d)
+    return True
+
+
 _STATS_OK_TYPES = (int, float, str, bool)
 
 
@@ -471,10 +492,6 @@ class HyTable:
             os.unlink(tmp)
         return snap
 
-    def _next_seq(self) -> int:
-        snaps = self.snapshots()
-        return (snaps[-1].sequence_number + 1) if snaps else 1
-
     def _write_data_files(
         self,
         df: DataFrame,
@@ -555,11 +572,12 @@ class HyTable:
     ) -> Snapshot:
         import dataclasses
 
-        snaps = self.snapshots()
-        if seq is None:
-            seq = (snaps[-1].sequence_number + 1) if snaps else 1
-        if parent is None and snaps:
-            parent = snaps[-1].snapshot_id
+        if seq is None or parent is None:
+            snaps = self.snapshots()
+            if seq is None:
+                seq = (snaps[-1].sequence_number + 1) if snaps else 1
+            if parent is None and snaps:
+                parent = snaps[-1].snapshot_id
         # stamp newly-added files (added_seq 0) with this commit's sequence
         manifest = tuple(
             dataclasses.replace(f, added_seq=seq) if f.added_seq == 0 else f
@@ -577,17 +595,85 @@ class HyTable:
             summary=summary or {},
         )
 
-    def _retrying_commit(self, build, max_retries: int = 5) -> Snapshot:
-        """CAS retry loop with jittered backoff
-        (doc iceberg-arch-geo-distributed-ha.md:287-311)."""
+    _COMMIT_ATTEMPTS = 5
+    # table metadata every commit carries forward: partition spec,
+    # write properties, evolved schema and rename history
+    _CARRY_KEYS = (
+        "partition_by", "partition_types", "partition_spec",
+        "partition_transforms", "write_distribution", "write_sort_order",
+        "table_schema", "renames",
+    )
+
+    def _commit_files(
+        self,
+        operation: str,
+        meta: Callable[[Snapshot | None], tuple[str, dict]],
+        added: tuple[DataFileRef, ...] = (),
+        removed: tuple[DataFileRef, ...] = (),
+        base: Snapshot | None = None,
+        carry: Snapshot | None = None,
+        staged: bool = False,
+        branch: str | None = None,
+    ) -> Snapshot:
+        """The one commit path.  A write is a file delta: the files it
+        ``added``, the files it ``removed`` (read and rewrote, taken from
+        ``base``, the snapshot it read) and ``meta(head) -> (schema_ddl,
+        summary changes)``, which may raise to refuse the head.
+
+        Each attempt re-reads the head and validates the delta against it,
+        as Iceberg's RewriteFiles / OverwriteFiles do: a removed file that
+        is no longer live raises :class:`CommitConflict`, and so, for an
+        op that removes data files, does a delete file or a schema or
+        rename change committed after ``base``.  A conflict is not
+        retried; the op must re-plan.  The manifest is head − removed +
+        added; the summary carries the ``_CARRY_KEYS`` of ``carry`` (the
+        head unless the op states another snapshot's).  The version file
+        is committed by link(2) CAS, and losing that race retries with
+        jitter (doc iceberg-arch-geo-distributed-ha.md:287-311).
+        ``branch`` commits onto that branch's head instead of main's."""
         import random
 
-        for attempt in range(max_retries):
-            snap = build()
+        gone = {f.path for f in removed}
+        rewrites_data = any(f.content == "data" for f in removed)
+        for attempt in range(self._COMMIT_ATTEMPTS):
+            snaps = self.snapshots()
+            if branch:
+                head = self.branch_head(branch)
+            else:
+                head = next((s for s in reversed(snaps) if not s.staged), None)
+            kept = head.manifest if head else ()
+            manifest = kept + tuple(added)
+            if removed:
+                lost = gone - {f.path for f in kept}
+                if lost:
+                    raise CommitConflict(f"{operation}: {min(lost)} is no longer live")
+                if rewrites_data and head.snapshot_id != base.snapshot_id and (
+                    any(f.content != "data" and f not in base.manifest for f in kept)
+                    or head.schema_ddl != base.schema_ddl
+                    or any(head.summary.get(k) != base.summary.get(k)
+                           for k in ("table_schema", "renames"))
+                ):
+                    raise CommitConflict(
+                        f"{operation}: a delete file or a schema change was committed "
+                        "after the snapshot it read"
+                    )
+                manifest = self._prune_dead_deletes(
+                    tuple(f for f in kept if f.path not in gone), tuple(added)
+                )
+            schema_ddl, changes = meta(head)
+            src = carry or head
+            summary = {k: src.summary[k] for k in self._CARRY_KEYS if src and k in src.summary}
+            summary.update(changes)
+            last = snaps[-1] if snaps else None
+            snap = self._make_snapshot(
+                operation, manifest, schema_ddl, staged=staged, summary=summary,
+                seq=last.sequence_number + 1 if last else 1,
+                parent=head.snapshot_id if branch else (last.snapshot_id if last else None),
+            )
             try:
                 return self._commit(snap)
             except CommitConflict:
-                if attempt == max_retries - 1:
+                if attempt == self._COMMIT_ATTEMPTS - 1:
                     raise
                 time.sleep(random.uniform(0.01, 0.05) * (attempt + 1))
         raise AssertionError("unreachable")
@@ -612,27 +698,19 @@ class HyTable:
             out["partition_transforms"] = transforms
         return out
 
-    _CARRY_KEYS = (
-        "partition_by", "partition_types", "partition_spec",
-        "partition_transforms", "write_distribution", "write_sort_order",
-        "table_schema", "renames",
-    )
-
-    def _carry_summary(self, head: "Snapshot | None") -> dict:
-        """Metadata every commit must carry forward from its parent:
-        partition spec + evolved schema + rename history."""
-        if head is None:
-            return {}
-        return {k: head.summary[k] for k in self._CARRY_KEYS if k in head.summary}
-
     def partition_spec(self) -> tuple[list[str], dict[str, str]]:
         """The table's partition spec (identity columns and/or transform
         strings) + identity-column types, from the latest summary."""
         cur = self.current_snapshot()
         if cur is None:
             return [], {}
-        spec = cur.summary.get("partition_spec", cur.summary.get("partition_by", []))
-        return list(spec), dict(cur.summary.get("partition_types", {}))
+        return self._spec(cur), dict(cur.summary.get("partition_types", {}))
+
+    @staticmethod
+    def _spec(snap: Snapshot | None) -> list[str]:
+        if snap is None:
+            return []
+        return list(snap.summary.get("partition_spec", snap.summary.get("partition_by", [])))
 
     def _merged_partition_summary(
         self, cur: "Snapshot | None", df: DataFrame, partition_by: list[str] | None
@@ -659,38 +737,28 @@ class HyTable:
         spec.  No data rewrite at any table size."""
         identity, transforms = parse_partition_spec(partition_by)
 
-        def build():
-            cur = self.current_snapshot()
-            if cur is None:
+        def meta(head):
+            if head is None:
                 raise NoSuchSnapshot("cannot evolve the spec of an empty table")
-            schema = SPARK_T.StructType.fromDDL(cur.schema_ddl)
+            schema = SPARK_T.StructType.fromDDL(head.schema_ddl)
             known = {f.name: f.dataType.simpleString() for f in schema.fields}
             missing = [c for c in identity if c not in known]
             if missing:
                 raise ValueError(
                     f"partition columns not in table schema: {missing}"
                 )
-            summary = {
-                **self._carry_summary(cur),
+            return head.schema_ddl, {
                 "partition_by": identity,
                 "partition_spec": list(partition_by),
                 "partition_types": {
-                    **dict(cur.summary.get("partition_types", {})),
+                    **dict(head.summary.get("partition_types", {})),
                     **{c: known[c] for c in identity},
                 },
-                "evolved_from": list(
-                    cur.summary.get("partition_spec", cur.summary.get("partition_by", []))
-                ),
+                "partition_transforms": transforms,
+                "evolved_from": self._spec(head),
             }
-            if transforms:
-                summary["partition_transforms"] = transforms
-            else:
-                summary.pop("partition_transforms", None)
-            return self._make_snapshot(
-                "evolve_spec", cur.manifest, cur.schema_ddl, summary=summary
-            )
 
-        return self._retrying_commit(build)
+        return self._commit_files("evolve_spec", meta)
 
     def create(
         self,
@@ -718,74 +786,63 @@ class HyTable:
             summary["write_distribution"] = distribution
         if sort_by:
             summary["write_sort_order"] = list(sort_by)
-        snap = self._make_snapshot(
-            "create", tuple(files), df.schema.simpleString(), summary=summary,
-        )
-        return self._commit(snap)
+
+        def meta(head):
+            if head is not None:
+                raise FileExistsError(f"table already exists at {self.root}")
+            return df.schema.simpleString(), summary
+
+        return self._commit_files("create", meta, added=tuple(files))
+
+    def _written_meta(self, df: DataFrame, partition_by: list[str] | None, **changes):
+        """``meta`` of a commit whose schema is that of the rows it wrote."""
+        return lambda head: (df.schema.simpleString(), {
+            **changes, **self._merged_partition_summary(head, df, partition_by),
+        })
 
     def append(self, df: DataFrame, staged: bool = False) -> Snapshot:
         """Append commit: parent manifest + new files (Iceberg fast-append)."""
         partition_by, _ = self.partition_spec()
         files = self._write_data_files(df, partition_by or None)
-
-        def build():
-            cur = self.current_snapshot()
-            manifest = (cur.manifest if cur else ()) + tuple(files)
-            summary = {**self._carry_summary(cur), "added_files": len(files)}
-            summary.update(self._merged_partition_summary(cur, df, partition_by))
-            return self._make_snapshot(
-                "append", manifest, df.schema.simpleString(), staged=staged,
-                summary=summary,
-            )
-
-        return self._retrying_commit(build)
+        return self._commit_files(
+            "append", self._written_meta(df, partition_by, added_files=len(files)),
+            added=tuple(files), staged=staged,
+        )
 
     def overwrite(
         self, df: DataFrame, staged: bool = False,
         partition_by: list[str] | None = None,
     ) -> Snapshot:
+        base = self.current_snapshot()
         if partition_by is None:
-            partition_by = self.partition_spec()[0] or None
+            partition_by = self._spec(base) or None
         files = self._write_data_files(df, partition_by)
-
-        def build():
-            head = self.current_snapshot()
-            summary = {**self._carry_summary(head), "added_files": len(files)}
-            summary.update(self._merged_partition_summary(head, df, partition_by))
-            return self._make_snapshot(
-                "overwrite", tuple(files), df.schema.simpleString(), staged=staged,
-                summary=summary,
-            )
-
-        return self._retrying_commit(build)
+        return self._commit_files(
+            "overwrite", self._written_meta(df, partition_by, added_files=len(files)),
+            added=tuple(files), removed=base.manifest if base else (), base=base,
+            staged=staged,
+        )
 
     def overwrite_partitions(self, df: DataFrame) -> Snapshot:
         """Dynamic partition overwrite (≙ overwritePartitions): replace
         only the partitions present in ``df``; files of untouched
         partitions survive unchanged."""
-        partition_by, _ = self.partition_spec()
+        base = self.current_snapshot()
+        partition_by = self._spec(base)
         if not partition_by:
             raise ValueError("table is not partitioned; use overwrite()")
         new_files = self._write_data_files(df, partition_by)
         replaced = {f.partition for f in new_files}
-
-        def build():
-            cur = self.current_snapshot()
-            kept = tuple(
-                f for f in (cur.manifest if cur else ()) if f.partition not in replaced
-            )
-            summary = {
-                **self._carry_summary(cur),
-                "added_files": len(new_files),
-                "replaced_partitions": sorted(str(dict(p)) for p in replaced),
-            }
-            summary.update(self._merged_partition_summary(cur, df, partition_by))
-            return self._make_snapshot(
-                "overwrite_partitions", kept + tuple(new_files),
-                df.schema.simpleString(), summary=summary,
-            )
-
-        return self._retrying_commit(build)
+        return self._commit_files(
+            "overwrite_partitions",
+            self._written_meta(
+                df, partition_by, added_files=len(new_files),
+                replaced_partitions=sorted(str(dict(p)) for p in replaced),
+            ),
+            added=tuple(new_files),
+            removed=tuple(f for f in base.manifest if f.partition in replaced),
+            base=base,
+        )
 
     def stage_append(self, df: DataFrame) -> Snapshot:
         """Write-audit-publish step 1: commit an invisible snapshot
@@ -799,26 +856,26 @@ class HyTable:
         staged = self.snapshot_by_id(snapshot_id)
         if not staged.staged:
             raise ValueError(f"{snapshot_id} is not staged")
+        base = self.current_snapshot()
 
-        def build():
+        def meta(head):
             # Cherry-pick safety: publish re-commits the STAGED manifest
             # wholesale, so a commit that landed after the stage would be
             # silently dropped (lost update).  Refuse unless the current
             # head is an ancestor of the staged snapshot — the Iceberg
             # cherry-pick conflict rule.
-            head = self.current_snapshot()
             if head is not None and not self._is_ancestor(head.snapshot_id, staged):
                 raise CommitConflict(
                     f"cannot publish {snapshot_id}: head {head.snapshot_id} "
                     "is not an ancestor of the staged snapshot (a commit "
                     "landed after staging; re-stage on the new head)"
                 )
-            return self._make_snapshot(
-                "publish", staged.manifest, staged.schema_ddl,
-                summary={**self._carry_summary(staged), "published_from": snapshot_id},
-            )
+            return staged.schema_ddl, {"published_from": snapshot_id}
 
-        return self._retrying_commit(build)
+        return self._commit_files(
+            "publish", meta, added=staged.manifest,
+            removed=base.manifest if base else (), base=base, carry=staged,
+        )
 
     def rewrite_data_files(
         self,
@@ -829,7 +886,8 @@ class HyTable:
     ) -> Snapshot:
         """Compaction (≙ rewrite_data_files; doc :1111-1115): rewrite the
         current snapshot's data into ~target-sized files, commit as
-        'replace' (same rows, new layout).
+        'replace' (same rows, new layout).  The commit swaps only the files
+        it read, so a file appended meanwhile stays.
 
         ``sort_by`` range-clusters on the given columns (each output file
         owns a contiguous key range → tight min/max footer stats → manifest
@@ -849,7 +907,7 @@ class HyTable:
         total = sum(f.size_bytes for f in cur.manifest)
         if n_files is None:
             n_files = max(1, round(total / target_file_size_bytes))
-        df = self.read()
+        df = self.read(snapshot_id=cur.snapshot_id)
         layout: dict = {}
         if sort_by:
             df = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(*sort_by)
@@ -870,17 +928,14 @@ class HyTable:
         # rewrite, exactly as Iceberg's rewrite respects the current spec.
         # distribute=False: the compaction's own layout (coalesce / range /
         # z-order) governs row placement here.
-        spec, _ = self.partition_spec()
-        files = self._write_data_files(df, spec or None, distribute=False)
-
-        def build():
-            return self._make_snapshot(
-                "replace", tuple(files), cur.schema_ddl,
-                summary={**self._carry_summary(cur), **layout,
-                         "compacted_from": len(cur.manifest), "to": len(files)},
-            )
-
-        return self._retrying_commit(build)
+        files = self._write_data_files(df, self._spec(cur) or None, distribute=False)
+        return self._commit_files(
+            "replace",
+            lambda head: (head.schema_ddl, {
+                **layout, "compacted_from": len(cur.manifest), "to": len(files),
+            }),
+            added=tuple(files), removed=cur.manifest, base=cur,
+        )
 
     def _zvalue_column(self, df: DataFrame, cols: list[str]):
         """Morton (Z-order) value: scale each column to 16 bits against its
@@ -926,9 +981,6 @@ class HyTable:
         return z
 
     # ---- read operations + pruning -----------------------------------------
-
-    def _paths(self, snap: Snapshot) -> list[str]:
-        return [os.path.join(self.root, f.path) for f in snap.manifest]
 
     @staticmethod
     def _transform_excludes(tr: dict, raw: str, op: str, val: object) -> bool:
@@ -1326,29 +1378,40 @@ class HyTable:
         return set(table.column("file_path").to_pylist())
 
     def _prune_dead_deletes(
-        self, files: tuple[DataFileRef, ...]
+        self, kept: tuple[DataFileRef, ...], added: tuple[DataFileRef, ...]
     ) -> tuple[DataFileRef, ...]:
-        """Drop delete-file refs that can no longer hide any data file in
-        ``files``: an equality delete applies only to data files added
-        STRICTLY before it, a position delete only to the file paths it
-        names.  Called after a COW rewrite replaced data files (the
-        rewrite materialized those deletes).  Not-yet-stamped new files
-        (``added_seq == 0``) are the rewrite's output — newer than every
-        delete, so they never keep one alive."""
-        data = [f for f in files if f.content == "data"]
+        """``kept + added`` without the delete files in ``kept`` (the head's
+        files a commit carries) that can no longer hide any data file: an
+        equality delete applies only to data files added STRICTLY before
+        it, a position delete only to the file paths it names.  Called
+        after a commit removed files (a rewrite materialized those
+        deletes).  Not-yet-stamped new files (``added_seq == 0``) are newer
+        than every delete, so they never keep one alive."""
+        data = [f for f in kept + added if f.content == "data"]
         min_seq = min((f.added_seq for f in data if f.added_seq), default=None)
         data_paths = {f.path for f in data}
-        kept = []
-        for f in files:
+
+        def live(f: DataFileRef) -> bool:
             if f.content == "equality_delete":
-                if min_seq is not None and min_seq < f.added_seq:
-                    kept.append(f)
-            elif f.content == "position_delete":
-                if data_paths & self._position_delete_targets(f):
-                    kept.append(f)
-            else:
-                kept.append(f)
-        return tuple(kept)
+                return min_seq is not None and min_seq < f.added_seq
+            if f.content == "position_delete":
+                return bool(data_paths & self._position_delete_targets(f))
+            return True
+
+        return tuple(f for f in kept if live(f)) + added
+
+    def _commit_rewrite(
+        self, operation: str, base: Snapshot, rewritten: list[DataFileRef],
+        new_files: list[DataFileRef],
+    ) -> Snapshot:
+        """Commit a copy-on-write op: ``new_files`` replace ``rewritten``."""
+        return self._commit_files(
+            operation,
+            lambda head: (head.schema_ddl, {
+                "rewritten_files": len(rewritten), "new_files": len(new_files),
+            }),
+            added=tuple(new_files), removed=tuple(rewritten), base=base,
+        )
 
     def delete_where(self, preds: list[tuple[str, str, object]]) -> Snapshot:
         """Row-level DELETE as file-granular copy-on-write: only files
@@ -1369,19 +1432,7 @@ class HyTable:
             if keep_rows.limit(1).count()
             else []
         )
-        affected_set = {f.path for f in affected}
-
-        def build():
-            head = self.current_snapshot()
-            untouched = tuple(f for f in head.manifest if f.path not in affected_set)
-            manifest = self._prune_dead_deletes(untouched + tuple(new_files))
-            return self._make_snapshot(
-                "delete", manifest, head.schema_ddl,
-                summary={**self._carry_summary(head),
-                         "rewritten_files": len(affected), "new_files": len(new_files)},
-            )
-
-        return self._retrying_commit(build)
+        return self._commit_rewrite("delete", cur, affected, new_files)
 
     def update_where(
         self, preds: list[tuple[str, str, object]], assignments: dict[str, str]
@@ -1400,19 +1451,7 @@ class HyTable:
             df = df.withColumn(col, F.when(match, F.expr(expr)).otherwise(F.col(col)))
         partition_by = list(cur.summary.get("partition_by", [])) or None
         new_files = self._write_data_files(df, partition_by)
-        affected_set = {f.path for f in affected}
-
-        def build():
-            head = self.current_snapshot()
-            untouched = tuple(f for f in head.manifest if f.path not in affected_set)
-            manifest = self._prune_dead_deletes(untouched + tuple(new_files))
-            return self._make_snapshot(
-                "update", manifest, head.schema_ddl,
-                summary={**self._carry_summary(head),
-                         "rewritten_files": len(affected), "new_files": len(new_files)},
-            )
-
-        return self._retrying_commit(build)
+        return self._commit_rewrite("update", cur, affected, new_files)
 
     def merge(self, source: DataFrame, key_cols: list[str]) -> Snapshot:
         """MERGE/upsert (COW): source rows replace matching target rows,
@@ -1442,19 +1481,7 @@ class HyTable:
         ).unionByName(source)
         partition_by = list(cur.summary.get("partition_by", [])) or None
         new_files = self._write_data_files(merged, partition_by)
-        affected_set = {f.path for f in affected}
-
-        def build():
-            head = self.current_snapshot()
-            untouched = tuple(f for f in head.manifest if f.path not in affected_set)
-            manifest = self._prune_dead_deletes(untouched + tuple(new_files))
-            return self._make_snapshot(
-                "merge", manifest, head.schema_ddl,
-                summary={**self._carry_summary(head),
-                         "rewritten_files": len(affected), "new_files": len(new_files)},
-            )
-
-        return self._retrying_commit(build)
+        return self._commit_rewrite("merge", cur, affected, new_files)
 
     def incremental_read(self, from_seq: int, to_seq: int) -> DataFrame:
         """Rows in files added in (from_seq, to_seq] — the fast-forward
@@ -1684,27 +1711,23 @@ class HyTable:
         cur = self.current_snapshot()
         if cur is None:
             raise NoSuchSnapshot("table is empty")
-        schema = self.table_schema(cur)
-        renames = [tuple(r) for r in cur.summary.get("renames", [])]
+        # until a schema op declares one, the schema is the files' (the
+        # same at every head; deriving it reads a footer, so only once)
+        derived = self.table_schema(cur)
 
-        def build():
-            head = self.current_snapshot()
+        def meta(head):
             new_schema, new_renames = mutate(
-                list(schema), list(renames), head.sequence_number + 1
+                self.table_schema(head) if head.summary.get("table_schema") else list(derived),
+                [tuple(r) for r in head.summary.get("renames", [])],
+                head.sequence_number + 1,
             )
-            summary = {
-                **head.summary,
+            return "struct<" + ",".join(f"{c}:{t}" for c, t in new_schema) + ">", {
                 "table_schema": [[c, t] for c, t in new_schema],
                 "renames": [list(r) for r in new_renames],
                 "change": op_detail,
             }
-            return self._make_snapshot(
-                "schema_change", head.manifest,
-                "struct<" + ",".join(f"{c}:{t}" for c, t in new_schema) + ">",
-                summary=summary,
-            )
 
-        return self._retrying_commit(build)
+        return self._commit_files("schema_change", meta)
 
     def add_column(self, name: str, ddl_type: str) -> Snapshot:
         def mutate(schema, renames, _seq):
@@ -1785,15 +1808,11 @@ class HyTable:
         ref = self._write_delete_file(matching, "equality_delete", tuple(delete_cols))
         if ref is None or ref.row_count == 0:
             return cur
-
-        def build():
-            head = self.current_snapshot()
-            return self._make_snapshot(
-                "delete_mor", head.manifest + (ref,), head.schema_ddl,
-                summary={**head.summary, "delete_rows": ref.row_count},
-            )
-
-        return self._retrying_commit(build)
+        return self._commit_files(
+            "delete_mor",
+            lambda head: (head.schema_ddl, {"delete_rows": ref.row_count}),
+            added=(ref,),
+        )
 
     def delete_positions_mor(self, preds: list[tuple[str, str, object]]) -> Snapshot:
         """Merge-on-read DELETE via a POSITION delete file: (file, row
@@ -1812,14 +1831,17 @@ class HyTable:
         if ref is None or ref.row_count == 0:
             return cur
 
-        def build():
-            head = self.current_snapshot()
-            return self._make_snapshot(
-                "delete_mor", head.manifest + (ref,), head.schema_ddl,
-                summary={**head.summary, "delete_rows": ref.row_count},
-            )
+        def meta(head):
+            # the delete names rows by (file, position): every file it
+            # read must still be live, or the delete hides nothing
+            live = {f.path for f in head.manifest}
+            if any(f.path not in live for f in affected):
+                raise CommitConflict(
+                    "delete_mor: a file the position delete names is no longer live"
+                )
+            return head.schema_ddl, {"delete_rows": ref.row_count}
 
-        return self._retrying_commit(build)
+        return self._commit_files("delete_mor", meta, added=(ref,))
 
     def upsert_mor(self, source: DataFrame, key_cols: list[str]) -> Snapshot:
         """Streaming-friendly MOR upsert (the Flink-CDC / equality-delete
@@ -1836,19 +1858,14 @@ class HyTable:
         data_files = self._write_data_files(source, partition_by or None)
         keys = source.select(key_cols).distinct().coalesce(1)
         del_ref = self._write_delete_file(keys, "equality_delete", tuple(key_cols))
-
-        def build():
-            head = self.current_snapshot()
-            return self._make_snapshot(
-                "upsert_mor",
-                head.manifest + tuple(data_files) + ((del_ref,) if del_ref else ()),
-                source.schema.simpleString(),
-                summary={**self._carry_summary(head),
-                         "added_files": len(data_files),
-                         "delete_rows": del_ref.row_count if del_ref else 0},
-            )
-
-        return self._retrying_commit(build)
+        return self._commit_files(
+            "upsert_mor",
+            lambda head: (source.schema.simpleString(), {
+                "added_files": len(data_files),
+                "delete_rows": del_ref.row_count if del_ref else 0,
+            }),
+            added=tuple(data_files) + ((del_ref,) if del_ref else ()),
+        )
 
     # ---- branches (≙ promote_to_regional_branch, doc :287-311) -------------
 
@@ -1900,18 +1917,12 @@ class HyTable:
         """Append on a branch: the commit is staged (invisible to main
         reads) and the branch pointer advances — the regional-branch write
         of the geo design (writers never touch main directly)."""
-        head = self.branch_head(name)
-        spec = head.summary.get("partition_spec", head.summary.get("partition_by", []))
-        files = self._write_data_files(df, list(spec) or None)
-
-        def build():
-            return self._make_snapshot(
-                "branch_append", head.manifest + tuple(files), df.schema.simpleString(),
-                staged=True, parent=head.snapshot_id,
-                summary={**head.summary, "branch": name},
-            )
-
-        snap = self._retrying_commit(build)
+        files = self._write_data_files(df, self._spec(self.branch_head(name)) or None)
+        snap = self._commit_files(
+            "branch_append",
+            lambda head: (df.schema.simpleString(), {"branch": name}),
+            added=tuple(files), staged=True, branch=name,
+        )
         self._advance_branch(name, snap.snapshot_id)
         return snap
 
@@ -1936,21 +1947,19 @@ class HyTable:
         ancestry check (expected_hash semantics): refuses if main moved
         past the branch point (diverged)."""
         bh = self.branch_head(name)
-        main = self.current_snapshot()
-        main_id = main.snapshot_id if main else None
-        if not self._is_ancestor(main_id, bh):
-            raise CommitConflict(
-                f"branch {name!r} does not descend from main head; cannot fast-forward"
-            )
+        base = self.current_snapshot()
 
-        def build():
-            return self._make_snapshot(
-                "fast_forward", bh.manifest, bh.schema_ddl,
-                summary={**{k: v for k, v in bh.summary.items() if k != "branch"},
-                         "fast_forwarded_from": name},
-            )
+        def meta(head):
+            if not self._is_ancestor(head.snapshot_id if head else None, bh):
+                raise CommitConflict(
+                    f"branch {name!r} does not descend from main head; cannot fast-forward"
+                )
+            return bh.schema_ddl, {"fast_forwarded_from": name}
 
-        return self._retrying_commit(build)
+        return self._commit_files(
+            "fast_forward", meta, added=bh.manifest,
+            removed=base.manifest if base else (), base=base, carry=bh,
+        )
 
     # ---- tags + refs metadata table (≙ Iceberg refs: BRANCH/TAG) -----------
 
@@ -2089,15 +2098,11 @@ class HyTable:
         deletable = {
             f.path for s in expired for f in s.manifest if f.path not in reachable
         }
-        deleted = 0
         for s in expired:
             os.unlink(self._version_path(s.sequence_number))
+        deleted = 0
         if delete_files:
-            for rel in deletable:
-                full = os.path.join(self.root, rel)
-                if os.path.exists(full):
-                    os.unlink(full)
-                    deleted += 1
+            deleted = sum(_delete_table_file(self.root, rel) for rel in deletable)
         return {"expired_snapshots": len(expired), "deleted_files": deleted}
 
     def orphan_files(self) -> list[str]:
@@ -2124,6 +2129,6 @@ class HyTable:
             full = os.path.join(self.root, rel)
             mtime_ms = os.path.getmtime(full) * 1000
             if older_than_ms is None or mtime_ms < older_than_ms:
-                os.unlink(full)
+                _delete_table_file(self.root, rel)
                 removed.append(rel)
         return removed

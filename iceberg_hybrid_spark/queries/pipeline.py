@@ -1009,7 +1009,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring joins tokens to the model on (lang, token) with an explicit
     shuffle_hash hint — the vocabulary is corpus-derived and must never
     be broadcast, but AQE's runtime conversion was broadcasting the
-    40 MiB materialized model at sf0.1 (r11 tools/broadcast_sweep.py);
+    40 MiB materialized model at sf0.1 (docs/ROUND11.md broadcast sweep);
     per-doc agg shuffles on (lang, doc_id); the final histogram is a
     tiny agg.  No window over a low-cardinality key."""
     docs = load_table(spark, sf_dir, "documents")
@@ -2865,8 +2865,8 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scoring hash-joins the pair stream to both models with explicit
     shuffle_hash hints — AQE's runtime conversion (compressed shuffle
     bytes vs the threshold) otherwise BROADCAST the bigram model, which
-    materialized 72 MiB at sf0.1 (caught by the r11
-    tools/broadcast_sweep.py) and grows with the corpus; the hinted
+    materialized 72 MiB at sf0.1 (caught by the broadcast sweep in
+    docs/ROUND11.md) and grows with the corpus; the hinted
     shuffled joins measured equal-to-faster (1.71 s vs 1.90 s) and stay
     memory-bounded at any scale.  Per-doc agg shuffles on
     (lang, doc_id); the histogram is a tiny final agg."""

@@ -32,6 +32,14 @@ def default_parallelism() -> int:
 CODEGEN_CACHE_ENTRIES = 1000
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory, and never above 48g: a fixed 48g
+    heap on a 16 GB host lets one JVM grow until the kernel kills it or
+    its neighbours."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // (1 << 20)
+    return f"{min(half_mb, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "iceberg-hybrid-spark",
     shuffle_partitions: int | None = None,
@@ -67,7 +75,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # Driver parity: the grading driver runs Spark 4's default ANSI
         # mode.  Pin it ON locally so every gate (pytest, bench,
         # check_oracle) exercises the stricter mode — round 4 shipped a

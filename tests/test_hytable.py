@@ -178,6 +178,27 @@ def test_expire_keeps_shared_files(spark, tmp_table_root):
     assert t.read().count() == 150  # all files still present
 
 
+def test_expire_leaves_only_live_files_and_their_sidecars(spark, tmp_table_root):
+    """Expiry deletes a dead data file's Hadoop ``.crc`` sidecar with it,
+    and then its commit directory once that is empty."""
+    t = HyTable(spark, tmp_table_root)
+    t.create(make_df(spark, 0, 20).repartition(2))
+    dead = t.append(make_df(spark, 20, 30)).manifest
+    t.rewrite_data_files()
+    result = t.expire_snapshots(retain_last=1)
+    live = {f.path for f in t.current_snapshot().manifest}
+    assert result["deleted_files"] == len(dead)  # data files, not sidecars
+    allowed = live | {
+        os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc") for p in live
+    }
+    left = set()
+    for dirpath, dirs, files in os.walk(t.data_dir):
+        assert dirs or files, f"empty directory left: {dirpath}"
+        left |= {os.path.relpath(os.path.join(dirpath, f), t.root) for f in files}
+    assert live <= left <= allowed
+    assert t.read().count() == 30
+
+
 def test_orphan_detection_and_removal(spark, tmp_table_root):
     t = HyTable(spark, tmp_table_root)
     t.create(make_df(spark, 0, 10))
@@ -192,6 +213,7 @@ def test_orphan_detection_and_removal(spark, tmp_table_root):
     assert os.path.exists(orphan)
     removed = t.remove_orphan_files()
     assert removed and not os.path.exists(orphan)
+    assert not os.path.exists(orphan_dir)  # its emptied commit directory too
 
 
 def test_rewrite_data_files_compacts(spark, tmp_table_root):
@@ -644,3 +666,151 @@ def test_in_and_not_equal_pruning(spark, tmp_path):
     assert t.read(preds=[("id", "!=", 500)]).count() == 200
     # != on a non-constant file keeps it
     assert t.read(preds=[("id", "!=", 5)]).count() == 200
+
+
+# ---- concurrent writers: every outcome is some serial order ---------------
+#
+# A tiny table (id, v, p) partitioned by p.  The op under test runs on one
+# handle; a second handle on the same root commits the racer after the op
+# has written its files and before its first CAS (the racer runs from a
+# patched ``HyTable._commit``, which also reaches the schema ops: they
+# write no data file).  The outcome must equal
+# the rows and columns of one of the two serial orders, or the op raises
+# CommitConflict, leaves the racer's head in place, and a retry of the op
+# then lands after the racer.
+
+_COLS = ("id", "v", "p")
+
+
+def _row(i, v=None):
+    return {"id": i, "v": i * 2 if v is None else v, "p": i % 2}
+
+
+def _frame(spark, rows):
+    from iceberg_hybrid_spark.session import local_frame
+
+    return local_frame(
+        spark, [tuple(r[c] for c in _COLS) for r in rows], "id bigint, v bigint, p int"
+    )
+
+
+def _adding(rows):
+    return lambda cols, table: (cols, table + rows)
+
+
+def _replacing_keys(src):
+    keys = {r["id"] for r in src}
+    return lambda cols, table: (cols, [r for r in table if r["id"] not in keys] + src)
+
+
+def _deleting_below(n):
+    return lambda cols, table: (cols, [r for r in table if r["id"] >= n])
+
+
+_MERGE_SRC = [_row(i, -2) for i in (5, 6, 7, 300)]
+_UPSERT_SRC = [_row(i, -3) for i in (5, 6, 7)]
+_PARTITION_SRC = [_row(i) for i in (400, 402)]
+
+# name -> (run it on a handle, its effect on (columns, rows))
+_WRITES = {
+    "append": (
+        lambda t: t.append(_frame(t.spark, [_row(i) for i in range(100, 103)])),
+        _adding([_row(i) for i in range(100, 103)]),
+    ),
+    "append_other": (
+        lambda t: t.append(_frame(t.spark, [_row(i) for i in range(200, 203)])),
+        _adding([_row(i) for i in range(200, 203)]),
+    ),
+    "rewrite_data_files": (
+        lambda t: t.rewrite_data_files(),
+        lambda cols, table: (cols, table),
+    ),
+    "delete_where": (
+        lambda t: t.delete_where([("id", "<", 10)]),
+        _deleting_below(10),
+    ),
+    "update_where": (
+        lambda t: t.update_where([("id", "<", 10)], {"v": "-1"}),
+        lambda cols, table: (cols, [{**r, "v": -1} if r["id"] < 10 else r for r in table]),
+    ),
+    "merge": (
+        lambda t: t.merge(_frame(t.spark, _MERGE_SRC), ["id"]),
+        _replacing_keys(_MERGE_SRC),
+    ),
+    "overwrite_partitions": (
+        lambda t: t.overwrite_partitions(_frame(t.spark, _PARTITION_SRC)),
+        lambda cols, table: (cols, [r for r in table if r["p"] != 0] + _PARTITION_SRC),
+    ),
+    "upsert_mor": (
+        lambda t: t.upsert_mor(_frame(t.spark, _UPSERT_SRC), ["id"]),
+        _replacing_keys(_UPSERT_SRC),
+    ),
+    "delete_where_mor": (
+        lambda t: t.delete_where_mor([("id", "<", 10)], ["id"]),
+        _deleting_below(10),
+    ),
+    "add_column": (
+        lambda t: t.add_column("a", "string"),
+        lambda cols, table: (cols + ("a",), table),
+    ),
+    "add_column_other": (
+        lambda t: t.add_column("b", "string"),
+        lambda cols, table: (cols + ("b",), table),
+    ),
+    "rename_column": (
+        lambda t: t.rename_column("v", "w"),
+        lambda cols, table: (
+            tuple("w" if c == "v" else c for c in cols),
+            [{("w" if k == "v" else k): x for k, x in r.items()} for r in table],
+        ),
+    ),
+}
+
+_RACES = [
+    (op, racer)
+    for op in ("append", "rewrite_data_files", "delete_where", "update_where",
+               "merge", "overwrite_partitions", "upsert_mor", "add_column")
+    for racer in ("append_other", "rewrite_data_files")
+] + [
+    ("add_column", "add_column_other"),
+    ("delete_where_mor", "rewrite_data_files"),
+    ("rename_column", "rewrite_data_files"),
+]
+
+
+def _outcome(cols, rows):
+    return list(cols), sorted((tuple(r.get(c) for c in cols) for r in rows), key=repr)
+
+
+def _serial(first, then, start):
+    return _outcome(*_WRITES[then][1](*_WRITES[first][1](*start)))
+
+
+@pytest.mark.parametrize("op,racer", _RACES, ids=[f"{o}-vs-{r}" for o, r in _RACES])
+def test_concurrent_commit_is_a_serial_order(spark, tmp_path, monkeypatch, op, racer):
+    root = str(tmp_path / "tbl")
+    start = (_COLS, [_row(i) for i in range(40)])
+    t = HyTable(spark, root)
+    t.create(_frame(spark, start[1]).repartition(2), partition_by=["p"])
+    other = HyTable(spark, root)
+    raced = []
+    cas = HyTable._commit
+
+    def racing_cas(self, snap, *args, **kwargs):
+        if self is t and not raced:
+            raced.append(_WRITES[racer][0](other).snapshot_id)
+        return cas(self, snap, *args, **kwargs)
+
+    monkeypatch.setattr(HyTable, "_commit", racing_cas)
+    try:
+        _WRITES[op][0](t)
+        allowed = [_serial(op, racer, start), _serial(racer, op, start)]
+    except CommitConflict:
+        assert t.current_snapshot().snapshot_id == raced[0]
+        monkeypatch.undo()
+        _WRITES[op][0](t)
+        allowed = [_serial(racer, op, start)]
+    assert raced
+    df = t.read()
+    got = _outcome(tuple(df.columns), [r.asDict() for r in df.collect()])
+    assert got in allowed
