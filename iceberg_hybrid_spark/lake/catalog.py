@@ -93,34 +93,37 @@ class HyCatalog:
 
     def run_maintenance(
         self,
-        compact_target_bytes: int = 256 * 1024 * 1024,
         retain_last: int = 3,
         compact_min_files: int = 8,
-        audit_checksums: bool = True,
         lease_floor=None,
         ann_indexes: dict | None = None,
     ) -> list[dict]:
         """The nightly upkeep cycle over EVERY table in the warehouse —
         compaction (only when fragmented past ``compact_min_files``) →
-        ref-aware snapshot expiry → tiered orphan removal (P14D general /
-        P3D tmp prefixes, from ``gc.orphan_grace_s``) → L2 closure audit.
+        snapshot expiry → tiered orphan removal (P14D general / P3D tmp
+        prefixes, from ``gc.orphan_grace_s``) → L2 closure audit.
         Returns one report dict per table; ANY per-table failure (audit,
         compaction, IO) is recorded in that table's report, not raised,
         so one broken table cannot block the fleet's cycle.
 
-        Orphan deletion goes through the same candidates → DeletePlan →
-        apply discipline as the standalone GC (one deletion code path;
-        per-file delete_after already encodes the tiered grace, so the
-        plan-level safety delay is 0 for this pre-aged nightly plan).
-        Each table's cycle is independent — on a real cluster the driver
-        fans these out as separate jobs (the scheduler parallelism knob,
-        not a data-plane shuffle).
+        Expiry and the GC producer keep the same snapshots, by the one
+        retention rule ``HyTable._retained``: the last ``retain_last``,
+        the head, every branch and tag head, and every snapshot at or
+        after the table's lease floor.  So once expiry has deleted the
+        files of the snapshots it dropped, the candidates it leaves are
+        orphans only, and they go through the same candidates →
+        DeletePlan → apply discipline as the standalone GC (per-file
+        delete_after already encodes the tiered grace, so the plan-level
+        safety delay is 0 for this pre-aged nightly plan).  Each table's
+        cycle is independent — on a real cluster the driver fans these
+        out as separate jobs (the scheduler parallelism knob, not a
+        data-plane shuffle).
 
         ``lease_floor``: optional callable ``identifier -> int | None``
         (typically ``lambda t: lease_store.min_leased_seq(t)``) — the
-        query-lease GC floor threaded through BOTH deletion paths
-        (snapshot expiry and candidate production), so a nightly sweep
-        can never delete files under an in-flight leased reader.
+        query-lease GC floor, which both expiry and the producer keep,
+        so a nightly sweep can never delete files under an in-flight
+        leased reader.
 
         ``ann_indexes``: optional ``identifier -> {"threshold": float,
         "rebuild": callable | None}`` declaring which tables are
@@ -152,9 +155,7 @@ class HyCatalog:
                     head = t.current_snapshot()
                     n_data = len(t.data_files(head)) if head else 0
                     if n_data >= compact_min_files:
-                        t.rewrite_data_files(
-                            target_file_size_bytes=compact_target_bytes
-                        )
+                        t.rewrite_data_files()
                         rep["compacted"] = True
                     else:
                         rep["compacted"] = False
@@ -190,19 +191,11 @@ class HyCatalog:
                     )
                     rep["expired_snapshots"] = exp["expired_snapshots"]
                     rep["deleted_files"] = exp["deleted_files"]
-                    orphan_cands = [
-                        c
-                        for c in G.produce_candidates(
-                            t,
-                            retain_last=retain_last,
-                            now_ms=now_ms,
-                            min_leased_seq=floor,
-                        )
-                        if c.reason == "orphan"
-                    ]
                     plan = G.DeletePlan(
                         t.root,
-                        orphan_cands,
+                        G.produce_candidates(
+                            t, retain_last=retain_last, now_ms=now_ms, min_leased_seq=floor
+                        ),
                         generated_at_ms=now_ms,
                         valid_from_ms=now_ms,
                         valid_until_ms=now_ms + 3_600_000,
@@ -216,7 +209,7 @@ class HyCatalog:
                     rep["orphans_deferred"] = sum(
                         1 for e in execs if e.result == "blocked_window"
                     )
-                    audit = audit_closure(t, checksums=audit_checksums)
+                    audit = audit_closure(t)
                     rep["audit_ok"] = True
                     rep["files_checked"] = audit["files_checked"]
                 except VerificationError as exc:

@@ -43,7 +43,8 @@ _TMP_PREFIXES = ("_tmp/", "_staging/", "compaction/tmp/")
 def orphan_grace_s(rel_path: str) -> int:
     """Grace tier for an orphan: P3D for a copy's ``.inprogress`` temp
     file or when any path segment starts a temp/staging prefix, else the
-    conservative P14D."""
+    conservative P14D.  Only directories match a prefix, so a Hadoop
+    ``.<name>.crc`` sidecar gets its data file's tier."""
     if rel_path.endswith(".inprogress"):
         return ORPHAN_TMP_GRACE_S
     parts = rel_path.split("/")
@@ -82,24 +83,19 @@ def produce_candidates(
     now_ms: int | None = None,
     min_leased_seq: int | None = None,
 ) -> list[GcCandidate]:
-    """Reachability diff: files referenced only by snapshots older than the
-    retained window, plus orphans — each stamped delete_after.
-
-    ``min_leased_seq`` is the query-lease GC floor (≙ QueryLease —
-    legacy LeasePort.java:6-11; GC doc :547-824): every snapshot at or
-    after the oldest leased sequence stays reachable regardless of the
-    retention window, so an in-flight reader pinned to a leased snapshot
-    never loses files under it.  Pass
-    ``LeaseStore.min_leased_seq(table)``; None (no active leases) leaves
-    retention-only semantics."""
+    """Reachability diff: files referenced only by snapshots the table's
+    one retention rule (``HyTable._retained``: the last ``retain_last``,
+    the head, every branch and tag head, and every snapshot at or after
+    the query-lease floor ``min_leased_seq``) does not keep, plus
+    orphans — each stamped delete_after.  Right after
+    ``expire_snapshots`` with the same arguments only orphans are left.
+    Pass ``LeaseStore.min_leased_seq(table)``; None means no active
+    lease."""
     now_ms = now_ms or int(time.time() * 1000)
     snaps = table.snapshots()
-    retained = snaps[-retain_last:] if retain_last else []
-    if min_leased_seq is not None:
-        retained = retained + [
-            s for s in snaps if s.sequence_number >= min_leased_seq
-        ]
-    reachable = {f.path for s in retained for f in s.manifest}
+    reachable = {
+        f.path for s in table._retained(snaps, retain_last, min_leased_seq) for f in s.manifest
+    }
     all_refs = {f.path: f for s in snaps for f in s.manifest}
     out = [
         GcCandidate(

@@ -285,7 +285,7 @@ def _check_files(root: str, triples: list[tuple]) -> list[str]:
     return sorted(errors)
 
 
-def audit_closure(table: HyTable, checksums: bool = True) -> dict:
+def audit_closure(table: HyTable) -> dict:
     """L2 nightly full-closure audit (≙ the scheduled third verification
     tier, iceberg-arch-hybrid-replica-dr.md:148-158): verify the file
     closure of EVERY retained snapshot — not just the promoted head —
@@ -309,7 +309,7 @@ def audit_closure(table: HyTable, checksums: bool = True) -> dict:
     snaps = table.snapshots(include_staged=True)
     for snap in snaps:
         for f in snap.manifest:
-            key = (f.path, f.size_bytes, f.checksum if checksums else "")
+            key = (f.path, f.size_bytes, f.checksum)
             if key not in ref_by_key:
                 ref_by_key[key] = (snap.sequence_number, f)
     triples = list(ref_by_key)
@@ -327,7 +327,6 @@ def audit_closure(table: HyTable, checksums: bool = True) -> dict:
     return {
         "snapshots_audited": len(snaps),
         "files_checked": len(triples),
-        "checksums": checksums,
     }
 
 

@@ -22,6 +22,7 @@ Metadata layout (one directory per table)::
 
     <root>/data/<commit-uuid>/part-*.parquet
     <root>/_meta/v<seq:06d>.json        ← snapshot file; O_EXCL create = CAS
+    <root>/_meta/refs/<name>/v<n:06d>.json ← branch/tag pointer, same CAS
 
 The commit primitive is ``open(v{N+1}.json, O_CREAT|O_EXCL)``: exactly one
 writer can create the next version file, losers re-read and retry — the
@@ -42,6 +43,7 @@ import contextlib
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 import zlib
@@ -301,6 +303,21 @@ def _delete_table_file(root: str, rel: str) -> bool:
     return True
 
 
+def _create_once(path: str, doc: dict) -> None:
+    """Create ``path`` holding ``doc`` unless it exists (then raise
+    FileExistsError) — the CAS register of version files and refs.
+    link(2) fails with EEXIST exactly like O_CREAT|O_EXCL, but the file
+    appears fully formed: a concurrent reader (or a streaming JSON source
+    tailing _meta/) never sees a half-written one."""
+    tmp = path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        json.dump(doc, fh)
+    try:
+        os.link(tmp, path)
+    finally:
+        os.unlink(tmp)
+
+
 _STATS_OK_TYPES = (int, float, str, bool)
 
 
@@ -461,35 +478,13 @@ class HyTable:
 
     # ---- commit (optimistic CAS) ------------------------------------------
 
-    def _commit(self, snap: Snapshot, expected_parent: str | None = "__any__") -> Snapshot:
-        """Atomically create v{seq}.json; O_EXCL is the CAS register.
-
-        ``expected_parent`` mirrors legacy CatalogPort.commitSnapshot's
-        optimistic-concurrency check: if given, the commit only succeeds
-        when the current visible head still matches.
-        """
+    def _commit(self, snap: Snapshot) -> Snapshot:
+        """Atomically create v{seq}.json; O_EXCL is the CAS register."""
         os.makedirs(self.meta_dir, exist_ok=True)
-        if expected_parent != "__any__":
-            head = self.current_snapshot()
-            head_id = head.snapshot_id if head else None
-            if head_id != expected_parent:
-                raise CommitConflict(
-                    f"expected parent {expected_parent}, head is {head_id}"
-                )
-        path = self._version_path(snap.sequence_number)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(snap.to_json(), fh)
-        # link(2) is the CAS register: it fails with EEXIST exactly like
-        # O_CREAT|O_EXCL, but the version file appears fully-formed — a
-        # concurrent reader (or a streaming JSON source tailing _meta/)
-        # never observes a half-written snapshot.
         try:
-            os.link(tmp, path)
+            _create_once(self._version_path(snap.sequence_number), snap.to_json())
         except FileExistsError:
             raise CommitConflict(f"seq {snap.sequence_number} already committed") from None
-        finally:
-            os.unlink(tmp)
         return snap
 
     def _write_data_files(
@@ -578,11 +573,15 @@ class HyTable:
                 seq = (snaps[-1].sequence_number + 1) if snaps else 1
             if parent is None and snaps:
                 parent = snaps[-1].snapshot_id
-        # stamp newly-added files (added_seq 0) with this commit's sequence
+        # stamp newly-added files (added_seq 0) and a new rename (effective
+        # seq 0) with this commit's sequence
         manifest = tuple(
             dataclasses.replace(f, added_seq=seq) if f.added_seq == 0 else f
             for f in manifest
         )
+        summary = dict(summary or {})
+        if "renames" in summary:
+            summary["renames"] = [[eff or seq, old, new] for eff, old, new in summary["renames"]]
         return Snapshot(
             snapshot_id=f"commit-{uuid.uuid4()}",
             sequence_number=seq,
@@ -592,7 +591,7 @@ class HyTable:
             schema_ddl=schema_ddl,
             manifest=manifest,
             staged=staged,
-            summary=summary or {},
+            summary=summary,
         )
 
     _COMMIT_ATTEMPTS = 5
@@ -630,7 +629,10 @@ class HyTable:
         head unless the op states another snapshot's).  The version file
         is committed by link(2) CAS, and losing that race retries with
         jitter (doc iceberg-arch-geo-distributed-ha.md:287-311).
-        ``branch`` commits onto that branch's head instead of main's."""
+        ``branch`` commits onto that branch's head instead of main's and
+        then moves the branch by a second CAS, on the ref version it read;
+        losing that race retries the same way, and the lost attempt's
+        snapshot stays unreferenced until expiry."""
         import random
 
         gone = {f.path for f in removed}
@@ -638,7 +640,8 @@ class HyTable:
         for attempt in range(self._COMMIT_ATTEMPTS):
             snaps = self.snapshots()
             if branch:
-                head = self.branch_head(branch)
+                ref, ref_version = self._read_ref(branch, "BRANCH")
+                head = self.snapshot_by_id(ref["snapshot_id"])
             else:
                 head = next((s for s in reversed(snaps) if not s.staged), None)
             kept = head.manifest if head else ()
@@ -671,7 +674,10 @@ class HyTable:
                 parent=head.snapshot_id if branch else (last.snapshot_id if last else None),
             )
             try:
-                return self._commit(snap)
+                self._commit(snap)
+                if branch:
+                    self._move_ref(branch, ref_version, snap.snapshot_id, "BRANCH")
+                return snap
             except CommitConflict:
                 if attempt == self._COMMIT_ATTEMPTS - 1:
                     raise
@@ -1719,7 +1725,6 @@ class HyTable:
             new_schema, new_renames = mutate(
                 self.table_schema(head) if head.summary.get("table_schema") else list(derived),
                 [tuple(r) for r in head.summary.get("renames", [])],
-                head.sequence_number + 1,
             )
             return "struct<" + ",".join(f"{c}:{t}" for c, t in new_schema) + ">", {
                 "table_schema": [[c, t] for c, t in new_schema],
@@ -1730,7 +1735,7 @@ class HyTable:
         return self._commit_files("schema_change", meta)
 
     def add_column(self, name: str, ddl_type: str) -> Snapshot:
-        def mutate(schema, renames, _seq):
+        def mutate(schema, renames):
             if any(c == name for c, _ in schema):
                 raise ValueError(f"column {name!r} already exists")
             schema.append((name, ddl_type))
@@ -1739,7 +1744,7 @@ class HyTable:
         return self._schema_change(mutate, f"add:{name}")
 
     def drop_column(self, name: str) -> Snapshot:
-        def mutate(schema, renames, _seq):
+        def mutate(schema, renames):
             if not any(c == name for c, _ in schema):
                 raise ValueError(f"no column {name!r}")
             return [(c, t) for c, t in schema if c != name], renames
@@ -1751,11 +1756,11 @@ class HyTable:
         if old in partition_by:
             raise ValueError("renaming partition columns is not supported")
 
-        def mutate(schema, renames, seq):
+        def mutate(schema, renames):
             if not any(c == old for c, _ in schema):
                 raise ValueError(f"no column {old!r}")
             schema = [(new if c == old else c, t) for c, t in schema]
-            renames.append((seq, old, new))
+            renames.append((0, old, new))  # effective at the commit's seq
             return schema, renames
 
         return self._schema_change(mutate, f"rename:{old}->{new}")
@@ -1867,64 +1872,80 @@ class HyTable:
             added=tuple(data_files) + ((del_ref,) if del_ref else ()),
         )
 
-    # ---- branches (≙ promote_to_regional_branch, doc :287-311) -------------
+    # ---- refs: branches + tags (≙ Iceberg refs; promote_to_regional_branch,
+    # doc :287-311) --------------------------------------------------------
+    #
+    # One store, one namespace for both kinds: ``_meta/refs/<name>/vN.json``
+    # holds {"snapshot_id", "type": BRANCH | TAG}.  A ref moves by creating
+    # the version after the one its mover read, through the same link(2)
+    # CAS register as the table's version files.  Every ref head is a GC
+    # root (``_retained``).
 
-    def _branch_dir(self, name: str) -> str:
-        return os.path.join(self.meta_dir, "branches", name)
+    def _read_ref(self, name: str, kind: str | None = None) -> tuple[dict | None, int]:
+        """Ref ``name``'s newest version and that version's number —
+        (None, 0) when there is none.  Given a ``kind``, a missing ref or
+        one of the other kind raises :class:`NoSuchSnapshot`."""
+        d = os.path.join(self.meta_dir, "refs", name)
+        versions = sorted(
+            f for f in (os.listdir(d) if os.path.isdir(d) else ())
+            if f.startswith("v") and f.endswith(".json")
+        )
+        ref = None
+        if versions:
+            with open(os.path.join(d, versions[-1])) as fh:
+                ref = json.load(fh)
+        if kind is not None and (ref is None or ref["type"] != kind):
+            raise NoSuchSnapshot(f"{kind.lower()} {name!r}")
+        return ref, int(versions[-1][1:-len(".json")]) if versions else 0
 
-    def _branch_versions(self, name: str) -> list[str]:
-        d = self._branch_dir(name)
-        if not os.path.isdir(d):
-            return []
-        return sorted(f for f in os.listdir(d) if f.endswith(".json"))
+    def _list_refs(self) -> dict[str, dict]:
+        """Every branch and tag, by name."""
+        d = os.path.join(self.meta_dir, "refs")
+        names = sorted(os.listdir(d)) if os.path.isdir(d) else []
+        return {n: ref for n in names if (ref := self._read_ref(n)[0]) is not None}
 
-    def _branch_names(self) -> list[str]:
-        d = os.path.join(self.meta_dir, "branches")
-        if not os.path.isdir(d):
-            return []
-        return sorted(n for n in os.listdir(d) if self._branch_versions(n))
-
-    def _advance_branch(self, name: str, snapshot_id: str) -> None:
-        """CAS-advance the branch pointer (O_EXCL versioned files — the
-        same register as main commits)."""
-        d = self._branch_dir(name)
+    def _move_ref(self, name: str, version: int, snapshot_id: str, kind: str) -> None:
+        """Point ref ``name`` at ``snapshot_id`` by creating version
+        ``version + 1``: raises :class:`CommitConflict` when another
+        writer moved the ref past the version this one read."""
+        d = os.path.join(self.meta_dir, "refs", name)
         os.makedirs(d, exist_ok=True)
-        n = len(self._branch_versions(name)) + 1
-        path = os.path.join(d, f"v{n:06d}.json")
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)  # raises on race
-        with os.fdopen(fd, "w") as fh:
-            json.dump({"snapshot_id": snapshot_id}, fh)
+        try:
+            _create_once(
+                os.path.join(d, f"v{version + 1:06d}.json"),
+                {"snapshot_id": snapshot_id, "type": kind},
+            )
+        except FileExistsError:
+            raise CommitConflict(f"ref {name!r} moved past version {version}") from None
+
+    def _create_ref(self, name: str, seq: int | None, kind: str) -> Snapshot:
+        snap = self.snapshot_by_seq(seq) if seq is not None else self.current_snapshot()
+        if snap is None:
+            raise NoSuchSnapshot(f"cannot {kind.lower()} an empty table")
+        if self._read_ref(name)[0] is not None:
+            raise FileExistsError(f"ref {name!r} already exists")
+        self._move_ref(name, 0, snap.snapshot_id, kind)
+        return snap
 
     def create_branch(self, name: str, seq: int | None = None) -> Snapshot:
         """Branch from a snapshot (default: current head) — ≙ ALTER TABLE
         CREATE BRANCH.  Branch state is a pointer; no data copies."""
-        if self._branch_versions(name):
-            raise FileExistsError(f"branch {name!r} already exists")
-        head = self.snapshot_by_seq(seq) if seq is not None else self.current_snapshot()
-        if head is None:
-            raise NoSuchSnapshot("cannot branch an empty table")
-        self._advance_branch(name, head.snapshot_id)
-        return head
+        return self._create_ref(name, seq, "BRANCH")
 
     def branch_head(self, name: str) -> Snapshot:
-        versions = self._branch_versions(name)
-        if not versions:
-            raise NoSuchSnapshot(f"branch {name!r}")
-        with open(os.path.join(self._branch_dir(name), versions[-1])) as fh:
-            return self.snapshot_by_id(json.load(fh)["snapshot_id"])
+        return self.snapshot_by_id(self._read_ref(name, "BRANCH")[0]["snapshot_id"])
 
     def append_to_branch(self, name: str, df: DataFrame) -> Snapshot:
         """Append on a branch: the commit is staged (invisible to main
-        reads) and the branch pointer advances — the regional-branch write
-        of the geo design (writers never touch main directly)."""
+        reads) and the branch pointer advances by CAS on the head the
+        commit was based on — the regional-branch write of the geo design
+        (writers never touch main directly)."""
         files = self._write_data_files(df, self._spec(self.branch_head(name)) or None)
-        snap = self._commit_files(
+        return self._commit_files(
             "branch_append",
             lambda head: (df.schema.simpleString(), {"branch": name}),
             added=tuple(files), staged=True, branch=name,
         )
-        self._advance_branch(name, snap.snapshot_id)
-        return snap
 
     def read_branch(self, name: str) -> DataFrame:
         """Scan the branch head — data files only, with the snapshot's
@@ -1963,34 +1984,14 @@ class HyTable:
 
     # ---- tags + refs metadata table (≙ Iceberg refs: BRANCH/TAG) -----------
 
-    def _tag_path(self, name: str) -> str:
-        return os.path.join(self.meta_dir, "tags", f"{name}.json")
-
-    def _tag_names(self) -> list[str]:
-        d = os.path.join(self.meta_dir, "tags")
-        if not os.path.isdir(d):
-            return []
-        return sorted(n[: -len(".json")] for n in os.listdir(d) if n.endswith(".json"))
-
     def create_tag(self, name: str, seq: int | None = None) -> Snapshot:
         """Immutable named snapshot pointer (≙ ALTER TABLE CREATE TAG —
-        the audit/release-pinning ref).  O_EXCL create: a tag can never
-        be repointed, only dropped."""
-        snap = self.snapshot_by_seq(seq) if seq is not None else self.current_snapshot()
-        if snap is None:
-            raise NoSuchSnapshot("cannot tag an empty table")
-        path = self._tag_path(name)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "x") as fh:  # O_EXCL — fails if the tag exists
-            json.dump({"snapshot_id": snap.snapshot_id}, fh)
-        return snap
+        the audit/release-pinning ref).  A tag is never moved, only
+        dropped."""
+        return self._create_ref(name, seq, "TAG")
 
     def tag_head(self, name: str) -> Snapshot:
-        try:
-            with open(self._tag_path(name)) as fh:
-                return self.snapshot_by_id(json.load(fh)["snapshot_id"])
-        except FileNotFoundError:
-            raise NoSuchSnapshot(f"tag {name!r}") from None
+        return self.snapshot_by_id(self._read_ref(name, "TAG")[0]["snapshot_id"])
 
     def read_tag(self, name: str) -> DataFrame:
         """Time-travel read pinned by tag (≙ VERSION AS OF 'tag') —
@@ -2001,10 +2002,11 @@ class HyTable:
 
     def drop_tag(self, name: str) -> bool:
         try:
-            os.remove(self._tag_path(name))
-            return True
-        except FileNotFoundError:
+            self._read_ref(name, "TAG")
+        except NoSuchSnapshot:
             return False
+        shutil.rmtree(os.path.join(self.meta_dir, "refs", name))
+        return True
 
     _REFS_SCHEMA = SPARK_T.StructType([
         SPARK_T.StructField("ref_name", SPARK_T.StringType()),
@@ -2016,93 +2018,54 @@ class HyTable:
     def refs(self) -> DataFrame:
         """≙ Iceberg's ``refs`` metadata table: main + every branch and
         tag with the snapshot each points at."""
-        rows = []
+        by_id = {s.snapshot_id: s for s in self.snapshots()}
         cur = self.current_snapshot()
-        if cur is not None:
-            rows.append(("main", "BRANCH", cur.snapshot_id, cur.sequence_number))
-        for name in self._branch_names():
-            try:
-                h = self.branch_head(name)
-                rows.append((name, "BRANCH", h.snapshot_id, h.sequence_number))
-            except NoSuchSnapshot:
-                pass
-        for name in self._tag_names():
-            try:
-                h = self.tag_head(name)
-                rows.append((name, "TAG", h.snapshot_id, h.sequence_number))
-            except NoSuchSnapshot:
-                pass
+        rows = [("main", "BRANCH", cur.snapshot_id, cur.sequence_number)] if cur else []
+        for name, ref in self._list_refs().items():
+            h = by_id.get(ref["snapshot_id"])
+            if h is not None:
+                rows.append((name, ref["type"], h.snapshot_id, h.sequence_number))
         return local_frame(self.spark, rows, self._REFS_SCHEMA)
 
     # ---- maintenance: expiry + orphans (≙ GC family) -----------------------
 
-    def expire_snapshots(
-        self,
-        retain_last: int = 1,
-        older_than_ms: int | None = None,
-        delete_files: bool = True,
-        min_leased_seq: int | None = None,
-    ) -> dict:
-        """≙ expire_snapshots(retain_last, older_than): drop old snapshot
-        metadata; physically delete files unreachable from any retained
-        snapshot (the gc-producer's `all_files − reachable`,
-        doc :778-795).
-
-        ``min_leased_seq`` is the query-lease GC floor (≙ QueryLease —
-        legacy LeasePort.java:6-11): snapshots at or after the oldest
-        leased sequence survive expiry whatever the retention window, so
-        an in-flight reader pinned to a leased snapshot never loses its
-        version file or data files.  Pass
-        ``LeaseStore.min_leased_seq(table)``."""
-        snaps = self.snapshots()
-        if not snaps:
-            return {"expired_snapshots": 0, "deleted_files": 0}
-        keep = set(s.sequence_number for s in snaps[-retain_last:]) if retain_last else set()
-        cur = self.current_snapshot()
-        if cur:
-            keep.add(cur.sequence_number)
+    def _retained(
+        self, snaps: list[Snapshot], retain_last: int, min_leased_seq: int | None
+    ) -> list[Snapshot]:
+        """The retained snapshots of ``snaps`` (one listing): the last
+        ``retain_last``, the current head, every branch and tag head
+        (Iceberg's ref-protected expiry) and, given the query-lease GC
+        floor ``min_leased_seq`` (≙ QueryLease — legacy
+        LeasePort.java:6-11), every snapshot at or after it, so an
+        in-flight reader pinned to a leased snapshot never loses its
+        files.  Expiry and the gc-producer both keep exactly these: the
+        GC roots of ``all_files − reachable(retained)`` (doc :778-795)."""
+        keep = {s.snapshot_id for s in snaps[-retain_last:]} if retain_last else set()
+        head = next((s for s in reversed(snaps) if not s.staged), None)
+        if head is not None:
+            keep.add(head.snapshot_id)
+        keep.update(ref["snapshot_id"] for ref in self._list_refs().values())
         if min_leased_seq is not None:
-            keep.update(
-                s.sequence_number
-                for s in snaps
-                if s.sequence_number >= min_leased_seq
-            )
-        # Branch pointers are refs: their head snapshots (and so their
-        # files) must survive expiry even when older than the retain
-        # window — Iceberg's ref-protected expire_snapshots.  Expiring a
-        # branch head would unlink its version file and physically delete
-        # its exclusive data files: live branch data loss.
-        for name in self._branch_names():
-            try:
-                keep.add(self.branch_head(name).sequence_number)
-            except NoSuchSnapshot:
-                pass
-        # Tags are immutable refs with the same protection: an expired
-        # tag head would break VERSION AS OF 'tag' and delete its files.
-        for name in self._tag_names():
-            try:
-                keep.add(self.tag_head(name).sequence_number)
-            except NoSuchSnapshot:
-                pass
-        expired = [
-            s for s in snaps
-            if s.sequence_number not in keep
-            and (older_than_ms is None or s.timestamp_ms < older_than_ms)
-        ]
-        reachable = {
-            f.path
-            for s in snaps
-            if s.sequence_number not in {e.sequence_number for e in expired}
-            for f in s.manifest
-        }
-        deletable = {
-            f.path for s in expired for f in s.manifest if f.path not in reachable
-        }
+            keep.update(s.snapshot_id for s in snaps if s.sequence_number >= min_leased_seq)
+        return [s for s in snaps if s.snapshot_id in keep]
+
+    def expire_snapshots(
+        self, retain_last: int = 1, min_leased_seq: int | None = None
+    ) -> dict:
+        """≙ expire_snapshots(retain_last): drop the metadata of every
+        snapshot ``_retained`` does not keep and delete the files no
+        retained snapshot references (the gc-producer's
+        `all_files − reachable`, doc :778-795).  Pass
+        ``LeaseStore.min_leased_seq(table)`` as ``min_leased_seq``."""
+        snaps = self.snapshots()
+        retained = self._retained(snaps, retain_last, min_leased_seq)
+        kept = {s.snapshot_id for s in retained}
+        expired = [s for s in snaps if s.snapshot_id not in kept]
+        reachable = {f.path for s in retained for f in s.manifest}
+        deletable = {f.path for s in expired for f in s.manifest} - reachable
         for s in expired:
             os.unlink(self._version_path(s.sequence_number))
-        deleted = 0
-        if delete_files:
-            deleted = sum(_delete_table_file(self.root, rel) for rel in deletable)
+        deleted = sum(_delete_table_file(self.root, rel) for rel in deletable)
         return {"expired_snapshots": len(expired), "deleted_files": deleted}
 
     def orphan_files(self) -> list[str]:
@@ -2110,25 +2073,19 @@ class HyTable:
         `Orphan ≈ Inventory − Reachable` (doc :886-899).  Inventory here
         is a filesystem walk; on S3 it would be the Inventory parquet.
         A copy killed mid-file leaves its ``<file>.parquet.inprogress``
-        temp file, which is listed too."""
+        temp file, and a data file deleted other than by GC can leave its
+        Hadoop ``.<file>.parquet.crc`` sidecar; both are listed.  A
+        sidecar whose data file exists or is referenced is not."""
         reachable = {f.path for s in self.snapshots() for f in s.manifest}
         orphans = []
         for dirpath, _, files in os.walk(self.data_dir):
             for fn in files:
-                full = os.path.join(dirpath, fn)
-                rel = os.path.relpath(full, self.root)
-                if rel not in reachable and fn.endswith((".parquet", ".parquet.inprogress")):
-                    orphans.append(rel)
+                rel = os.path.relpath(os.path.join(dirpath, fn), self.root)
+                if fn.startswith(".") and fn.endswith(".parquet.crc"):
+                    data = fn[1:-len(".crc")]
+                    if data in files or os.path.join(os.path.dirname(rel), data) in reachable:
+                        continue
+                elif rel in reachable or not fn.endswith((".parquet", ".parquet.inprogress")):
+                    continue
+                orphans.append(rel)
         return sorted(orphans)
-
-    def remove_orphan_files(self, older_than_ms: int | None = None) -> list[str]:
-        """Delete orphans older than the grace period (doc: P14D general,
-        P3D tmp prefixes — caller picks the window)."""
-        removed = []
-        for rel in self.orphan_files():
-            full = os.path.join(self.root, rel)
-            mtime_ms = os.path.getmtime(full) * 1000
-            if older_than_ms is None or mtime_ms < older_than_ms:
-                _delete_table_file(self.root, rel)
-                removed.append(rel)
-        return removed

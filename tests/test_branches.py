@@ -2,8 +2,11 @@
 (iceberg-arch-geo-distributed-ha.md:287-311): regional writers commit to
 a branch; main advances only by verified CAS fast-forward."""
 
+import time
+
 import pytest
 
+from iceberg_hybrid_spark.lake import gc as G
 from iceberg_hybrid_spark.lake.table import CommitConflict, HyTable, NoSuchSnapshot
 
 
@@ -112,3 +115,52 @@ def test_expire_keeps_tag_head(spark, table):
         table.append(spark.range(lo, lo + 10).toDF("id"))
     table.expire_snapshots(retain_last=1)
     assert table.read_tag("v1").count() == 100  # still readable
+
+
+def test_gc_producer_keeps_ref_heads(spark, table):
+    """Every ref head is a GC root: a retention window that has moved
+    past the snapshot a tag and a branch point at does not make the
+    producer mark their files, and an aged plan leaves both readable."""
+    table.create_tag("v1", seq=1)
+    table.create_branch("b", seq=1)
+    table.overwrite(spark.range(0, 5).toDF("id"))
+    table.overwrite(spark.range(0, 3).toDF("id"))
+    now = int(time.time() * 1000)
+    gen = now - 400_000
+    cands = G.produce_candidates(table, retain_last=1, grace_s=0, now_ms=gen)
+    assert {c.file_uri for c in cands} == {f.path for f in table.snapshot_by_seq(2).manifest}
+    plan = G.DeletePlan(table.root, cands, gen, gen, now + 10**7)
+    assert {e.result for e in G.apply_delete_plan(plan, safety_delay_s=60, now_ms=now)} == {"deleted"}
+    assert table.read_tag("v1").count() == 100
+    assert table.read_branch("b").count() == 100
+    assert table.read().count() == 3
+
+
+def test_refs_share_one_namespace(table):
+    table.create_tag("r")
+    with pytest.raises(FileExistsError):
+        table.create_branch("r")
+    with pytest.raises(NoSuchSnapshot):
+        table.branch_head("r")
+
+
+def test_branch_append_retries_a_lost_pointer_race(spark, table, monkeypatch):
+    """A second handle appends to the branch between this append's
+    snapshot commit and its pointer move: the move is a CAS on the ref
+    version the commit was based on, so it fails, the append retries on
+    the racer's head, and neither append is lost."""
+    table.create_branch("b")
+    other = HyTable(spark, table.root)
+    raced = []
+    cas = HyTable._commit
+
+    def commit_then_race(self, snap):
+        out = cas(self, snap)
+        if self is table and not raced:
+            raced.append(other.append_to_branch("b", spark.range(100, 103).toDF("id")))
+        return out
+
+    monkeypatch.setattr(HyTable, "_commit", commit_then_race)
+    table.append_to_branch("b", spark.range(200, 205).toDF("id"))
+    assert raced
+    assert table.read_branch("b").count() == 100 + 3 + 5

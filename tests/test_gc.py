@@ -108,7 +108,9 @@ def test_tiered_orphan_grace(spark, tmp_table_root):
     """Doc :838-852: a 5-day-old `_tmp/` orphan (P3D tier) is deletable
     while a same-age data orphan (P14D tier) is still protected.  A
     killed copy's `.inprogress` temp file is in the P3D tier too: due
-    at 4 days old, deferred at 1 hour old."""
+    at 4 days old, deferred at 1 hour old.  A Hadoop `.crc` sidecar whose
+    data file is gone is an orphan in its data file's tier; the live
+    files' sidecars are not listed."""
     t = setup_table_with_garbage(spark, tmp_table_root)
     tmp_dir = os.path.join(t.data_dir, "_tmp")
     os.makedirs(tmp_dir)
@@ -116,8 +118,10 @@ def test_tiered_orphan_grace(spark, tmp_table_root):
     data_orphan = os.path.join(t.data_dir, "stray.parquet")
     old_copy = os.path.join(t.data_dir, "killed-copy.parquet.inprogress")
     new_copy = os.path.join(t.data_dir, "live-copy.parquet.inprogress")
+    sidecar = os.path.join(tmp_dir, ".gone.parquet.crc")
     for path, age_s in ((tmp_orphan, 5 * 86_400), (data_orphan, 5 * 86_400),
-                        (old_copy, 4 * 86_400), (new_copy, 3_600)):
+                        (old_copy, 4 * 86_400), (new_copy, 3_600),
+                        (sidecar, 5 * 86_400)):
         with open(path, "wb") as f:
             f.write(b"junk")
         then = time.time() - age_s
@@ -127,7 +131,7 @@ def test_tiered_orphan_grace(spark, tmp_table_root):
     gen = now - 400_000
     cands = [c for c in G.produce_candidates(t, retain_last=2, now_ms=gen)
              if c.reason == "orphan"]
-    assert len(cands) == 4
+    assert len(cands) == 5
     plan = G.DeletePlan(t.root, cands, generated_at_ms=gen,
                         valid_from_ms=gen, valid_until_ms=now + 10**7)
     by_file = {e.file_uri: e.result
@@ -136,6 +140,8 @@ def test_tiered_orphan_grace(spark, tmp_table_root):
     assert by_file["data/stray.parquet"] == "blocked_window"
     assert by_file["data/killed-copy.parquet.inprogress"] == "deleted"
     assert by_file["data/live-copy.parquet.inprogress"] == "blocked_window"
+    assert by_file["data/_tmp/.gone.parquet.crc"] == "deleted"
+    assert not os.path.exists(sidecar)
     assert not os.path.exists(tmp_orphan)
     assert os.path.exists(data_orphan)
     assert not os.path.exists(old_copy)
@@ -149,6 +155,9 @@ def test_orphan_grace_tiers():
     assert G.orphan_grace_s("data/part-0.parquet.inprogress") == G.ORPHAN_TMP_GRACE_S
     assert G.orphan_grace_s("data/part-0.parquet") == G.ORPHAN_GRACE_S
     assert G.orphan_grace_s("data/tmpish/f.parquet") == G.ORPHAN_GRACE_S
+    # a sidecar is in its data file's tier
+    assert G.orphan_grace_s("data/_tmp/.x.parquet.crc") == G.ORPHAN_TMP_GRACE_S
+    assert G.orphan_grace_s("data/c1/.part-0.parquet.crc") == G.ORPHAN_GRACE_S
 
 
 def test_lease_floor_protects_leased_and_newer_snapshots(spark, tmp_table_root):

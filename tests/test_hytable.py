@@ -9,6 +9,7 @@ import time
 
 import pytest
 
+from iceberg_hybrid_spark.lake import gc as G
 from iceberg_hybrid_spark.lake.table import CommitConflict, HyTable, NoSuchSnapshot
 
 
@@ -135,16 +136,6 @@ def test_cas_conflict(spark, tmp_table_root):
         t._commit(snap_b)
 
 
-def test_expected_parent_cas(spark, tmp_table_root):
-    """≙ commitSnapshot(expectedParent) optimistic concurrency."""
-    t = HyTable(spark, tmp_table_root)
-    s1 = t.create(make_df(spark, 0, 10))
-    t.append(make_df(spark, 10, 20))
-    stale = t._make_snapshot("append", (), "id BIGINT")
-    with pytest.raises(CommitConflict):
-        t._commit(stale, expected_parent=s1.snapshot_id)
-
-
 def test_append_retries_past_conflict(spark, tmp_table_root):
     """The retrying commit loop re-reads the head and lands at the next seq."""
     t = HyTable(spark, tmp_table_root)
@@ -208,11 +199,21 @@ def test_orphan_detection_and_removal(spark, tmp_table_root):
     with open(orphan, "wb") as f:
         f.write(b"junk")
     assert t.orphan_files() == [os.path.relpath(orphan, t.root)]
-    # grace window: too-new orphan survives an older_than cutoff in the past
-    assert t.remove_orphan_files(older_than_ms=0) == []
+    # removal goes through the GC producer/executor (grace tiers: test_gc)
+    now = int(time.time() * 1000)
+
+    def collect():
+        cands = G.produce_candidates(t, retain_last=1, now_ms=now)
+        assert [c.reason for c in cands] == ["orphan"]
+        plan = G.DeletePlan(t.root, cands, now, now, now + 1)
+        return [e.result for e in G.apply_delete_plan(plan, 0, now_ms=now)]
+
+    assert collect() == ["blocked_window"]  # a fresh orphan is in its grace
     assert os.path.exists(orphan)
-    removed = t.remove_orphan_files()
-    assert removed and not os.path.exists(orphan)
+    aged = time.time() - 15 * 86_400
+    os.utime(orphan, (aged, aged))
+    assert collect() == ["deleted"]
+    assert not os.path.exists(orphan)
     assert not os.path.exists(orphan_dir)  # its emptied commit directory too
 
 

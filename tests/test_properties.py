@@ -2,10 +2,12 @@
 commits, minhash/jaccard invariants."""
 
 import threading
+import time
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from iceberg_hybrid_spark.lake import gc as G
 from iceberg_hybrid_spark.lake.table import HyTable
 
 
@@ -16,6 +18,9 @@ op_strategy = st.lists(
         st.tuples(st.just("append"), st.integers(min_value=1, max_value=40)),
         st.tuples(st.just("overwrite"), st.integers(min_value=0, max_value=40)),
         st.tuples(st.just("expire"), st.integers(min_value=1, max_value=3)),
+        st.tuples(st.just("tag"), st.just(0)),
+        st.tuples(st.just("branch"), st.integers(min_value=1, max_value=40)),
+        st.tuples(st.just("gc"), st.integers(min_value=1, max_value=3)),
     ),
     min_size=1,
     max_size=6,
@@ -26,43 +31,67 @@ op_strategy = st.lists(
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(ops=op_strategy)
 def test_hytable_matches_model(spark, tmp_path_factory, ops):
-    """Row count and snapshot-count invariants hold for arbitrary
-    append/overwrite/expire sequences; time travel always reproduces the
-    model's historical row counts for retained snapshots."""
+    """Row count and snapshot-set invariants hold for arbitrary
+    append/overwrite/expire/tag/branch/gc sequences: expiry keeps exactly
+    the model's retained snapshots (the last N, the head and every ref
+    head), time travel reproduces the model's historical row counts for
+    every snapshot GC has not collected, and every ref head reads its
+    model row count."""
     root = str(tmp_path_factory.mktemp("prop") / "tbl")
     t = HyTable(spark, root)
     model_rows = 0
-    history: list[int] = []  # model row-count per committed seq
-    for op, arg in ops:
+    head_seq = 0
+    history: dict[int, int] = {}  # model row count per committed seq
+    refs: dict[str, int] = {}  # ref name -> the seq it points at
+    collected: set[int] = set()  # seqs whose files GC may have deleted
+
+    def retained(last: int) -> set[int]:
+        return set(sorted(history)[-last:]) | {head_seq} | set(refs.values())
+
+    for i, (op, arg) in enumerate(ops):
         if op == "append":
             df = spark.range(arg).toDF("id")
-            if t.exists():
-                t.append(df)
-            else:
-                t.create(df)
+            head_seq = (t.append(df) if t.exists() else t.create(df)).sequence_number
             model_rows += arg
-            history.append(model_rows)
+            history[head_seq] = model_rows
+        elif not t.exists():
+            continue
         elif op == "overwrite":
-            if not t.exists():
-                continue
-            t.overwrite(spark.range(arg).toDF("id"))
+            head_seq = t.overwrite(spark.range(arg).toDF("id")).sequence_number
             model_rows = arg
-            history.append(model_rows)
-        else:  # expire
-            if not t.exists():
-                continue
+            history[head_seq] = model_rows
+        elif op == "tag":
+            refs[f"t{i}"] = t.create_tag(f"t{i}").sequence_number
+        elif op == "branch":
+            t.create_branch(f"b{i}")
+            seq = t.append_to_branch(f"b{i}", spark.range(arg).toDF("id")).sequence_number
+            history[seq] = model_rows + arg
+            refs[f"b{i}"] = seq
+        elif op == "expire":
+            keep = retained(arg)
             t.expire_snapshots(retain_last=arg)
+            history = {s: n for s, n in history.items() if s in keep}
+        else:  # gc: produce + an aged apply, no grace
+            keep = retained(arg)
+            now = int(time.time() * 1000)
+            gen = now - 400_000
+            cands = G.produce_candidates(t, retain_last=arg, grace_s=0, now_ms=gen)
+            G.apply_delete_plan(
+                G.DeletePlan(t.root, cands, gen, gen, now + 10**7), safety_delay_s=60, now_ms=now
+            )
+            collected |= set(history) - keep
     if not t.exists():
         return
+    assert [s.sequence_number for s in t.snapshots()] == sorted(history)
+    assert t.current_snapshot().sequence_number == head_seq
     assert t.read().count() == model_rows
-    # retained snapshots still read to their historical counts
-    snaps = t.snapshots()
-    assert len(snaps) >= 1
-    for s in snaps:
-        expected = history[s.sequence_number - 1]
-        assert t.read(seq=s.sequence_number).count() == expected
-    # current is always the max retained sequence
-    assert t.current_snapshot().sequence_number == snaps[-1].sequence_number
+    for name, seq in refs.items():
+        is_branch = name.startswith("b")
+        assert (t.branch_head(name) if is_branch else t.tag_head(name)).sequence_number == seq
+        assert (t.read_branch(name) if is_branch else t.read_tag(name)).count() == history[seq]
+    # the other snapshots GC has not collected still read to their counts
+    for seq in sorted(set(history) - collected - set(refs.values()) - {head_seq}):
+        assert t.read(seq=seq).count() == history[seq]
 
 
 def test_concurrent_appends_no_lost_updates(spark, tmp_path):
@@ -95,6 +124,50 @@ def test_concurrent_appends_no_lost_updates(spark, tmp_path):
     snaps = t.snapshots()
     for prev, cur in zip(snaps, snaps[1:]):
         assert cur.parent_id == prev.snapshot_id
+
+
+def test_concurrent_branch_appends_no_lost_updates(spark, tmp_path, monkeypatch):
+    """N racing branch writers: the branch moves by CAS on the head each
+    commit was based on, so every append lands on the branch exactly
+    once and main is untouched.  The writers' first commits start
+    together, and the one that wins pauses before its pointer move, so
+    the others commit on the same branch head meanwhile."""
+    root = str(tmp_path / "tbl")
+    t = HyTable(spark, root)
+    t.create(spark.range(0, 10).toDF("id"))
+    t.create_branch("b")
+    errors = []
+    cas = HyTable._commit
+    start = threading.Barrier(4)
+    first = threading.local()
+
+    def racing_cas(self, snap):
+        if getattr(first, "done", False):
+            return cas(self, snap)
+        first.done = True
+        start.wait()
+        out = cas(self, snap)
+        time.sleep(0.1)
+        return out
+
+    monkeypatch.setattr(HyTable, "_commit", racing_cas)
+
+    def writer(k):
+        try:
+            HyTable(spark, root).append_to_branch(
+                "b", spark.range(k * 100, k * 100 + 20).toDF("id")
+            )
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(k,)) for k in range(4)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert not errors
+    assert t.read_branch("b").count() == 10 + 4 * 20
+    assert t.read().count() == 10
 
 
 # --- minhash / jaccard invariants -------------------------------------------

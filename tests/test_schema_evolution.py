@@ -44,6 +44,16 @@ def test_rename_column_maps_old_files(spark, table):
     assert got[50] == "fifty" and got[3] == "3"
 
 
+def test_rename_epoch_is_the_commit_sequence(spark, table):
+    """A rename takes effect at the sequence number its commit takes,
+    which counts staged snapshots too: a file staged before the rename
+    was written under the old name."""
+    staged = table.stage_append(spark.range(10, 12).selectExpr("id", "CAST(id AS STRING) AS name"))
+    snap = table.rename_column("name", "label")
+    assert snap.sequence_number == staged.sequence_number + 1
+    assert snap.summary["renames"] == [[snap.sequence_number, "name", "label"]]
+
+
 def test_rename_then_add_same_name(spark, table):
     table.rename_column("name", "label")
     table.add_column("name", "int")  # new, unrelated column reusing the name
