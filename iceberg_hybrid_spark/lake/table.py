@@ -33,13 +33,14 @@ changes.
 
 Scale posture: metadata ops are O(files-in-snapshot) driver-side JSON
 (fine up to millions of files — this is what Iceberg manifests are), and
-all *data* movement is Spark jobs; nothing row-level ever touches the
-driver.
+all *data* movement is Spark jobs; the driver handles rows only when it
+already holds them (a local relation, encoded there into one file).
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import re
@@ -348,7 +349,9 @@ def _parquet_column_stats(
             else:
                 null_known.setdefault(name, True)
                 null_totals[name] = null_totals.get(name, 0) + st.null_count
-            if st is None or not st.has_min_max:
+            # decimal min/max are not JSON-safe (pyarrow returns Decimal,
+            # or cannot decode an int32/int64-backed one at all)
+            if st is None or not st.has_min_max or st.logical_type.type == "DECIMAL":
                 continue
             lo, hi = st.min, st.max
             if isinstance(lo, bytes):
@@ -387,6 +390,131 @@ def _parse_hive_partition(rel_dir: str) -> tuple[tuple[str, str], ...]:
             k, _, v = seg.partition("=")
             parts.append((k, v))
     return tuple(parts)
+
+
+def _as_nullable(dt: SPARK_T.DataType) -> SPARK_T.DataType:
+    """``dt`` with every field, element and value nullable — the schema
+    Spark's parquet writer records for any frame."""
+    if isinstance(dt, SPARK_T.StructType):
+        return SPARK_T.StructType([
+            SPARK_T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, SPARK_T.ArrayType):
+        return SPARK_T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, SPARK_T.MapType):
+        return SPARK_T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+_CRC_CHUNK = 512
+
+
+def _write_crc_sidecar(path: str) -> None:
+    """Write Hadoop ``ChecksumFileSystem``'s ``.<name>.crc`` for ``path``:
+    the magic ``crc\\0``, the bytes per checksum, then one big-endian
+    CRC32 per chunk.  Every JVM read of the file then verifies it, as it
+    does a file Spark wrote."""
+    import struct
+
+    with open(path, "rb") as fh:
+        data = fh.read()
+    sums = b"".join(
+        struct.pack(">I", zlib.crc32(data[i:i + _CRC_CHUNK]))
+        for i in range(0, len(data), _CRC_CHUNK)
+    )
+    d, name = os.path.split(path)
+    with open(os.path.join(d, f".{name}.crc"), "wb") as fh:
+        fh.write(b"crc\0" + struct.pack(">i", _CRC_CHUNK) + sums)
+
+
+# the types the driver writer encodes as Spark's writer does; a frame
+# with any other (a year-month interval has no Arrow type at all; time,
+# variant, geo types and UDTs are untested) goes to Spark's writer
+_DRIVER_ATOMIC = (
+    SPARK_T.BooleanType, SPARK_T.ByteType, SPARK_T.ShortType, SPARK_T.IntegerType,
+    SPARK_T.LongType, SPARK_T.FloatType, SPARK_T.DoubleType, SPARK_T.DecimalType,
+    SPARK_T.StringType, SPARK_T.BinaryType, SPARK_T.DateType, SPARK_T.TimestampType,
+    SPARK_T.TimestampNTZType, SPARK_T.DayTimeIntervalType, SPARK_T.NullType,
+)
+
+
+def _driver_encodable(dt: SPARK_T.DataType) -> bool:
+    """Whether ``_write_local_frame`` can write a column of type ``dt``."""
+    if isinstance(dt, SPARK_T.StructType):
+        return all(_driver_encodable(f.dataType) for f in dt.fields)
+    if isinstance(dt, SPARK_T.ArrayType):
+        return _driver_encodable(dt.elementType)
+    if isinstance(dt, SPARK_T.MapType):
+        return _driver_encodable(dt.keyType) and _driver_encodable(dt.valueType)
+    return type(dt) in _DRIVER_ATOMIC
+
+
+def _write_local_frame(df: DataFrame, out_dir: str) -> None:
+    """Write a driver-held frame (``df.isLocal()``) into the new directory
+    ``out_dir`` as one parquet file, encoded in the driver: Spark converts
+    the rows to Arrow (no Python worker) and pyarrow writes them as
+    Spark's writer would — snappy, every column nullable, Spark's schema
+    and version in the footer, a ``.crc`` sidecar.  Its schema must be
+    ``_driver_encodable``."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = _as_nullable(df.schema)
+    table = df.toArrow().cast(to_arrow_schema(schema)).replace_schema_metadata({
+        "org.apache.spark.version": df.sparkSession.version,
+        "org.apache.spark.sql.parquet.row.metadata": schema.json(),
+    })
+    os.makedirs(out_dir)
+    path = os.path.join(out_dir, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet")
+    pq.write_table(table, path, compression="snappy")
+    _write_crc_sidecar(path)
+
+
+@functools.lru_cache(maxsize=256)
+def _ddl_fields(schema_ddl: str) -> tuple[tuple[str, str], ...]:
+    """(name, type) of each top-level field of a ``struct<…>`` string."""
+    return tuple(
+        (f.name, f.dataType.simpleString())
+        for f in SPARK_T.StructType.fromDDL(schema_ddl).fields
+    )
+
+
+def _struct_ddl(cols) -> str:
+    return "struct<" + ",".join(f"{c}:{t}" for c, t in cols) + ">"
+
+
+def _read_schema(cols) -> str:
+    """A ``DataFrameReader.schema`` string for (name, type) pairs."""
+    return ", ".join("`{}` {}".format(c.replace("`", "``"), t) for c, t in cols)
+
+
+def _epoch_columns(cols, renames, added_seq: int) -> list[tuple[str, str, str]]:
+    """(file name, target name, type) of each target column in ``cols``
+    that a file written at ``added_seq`` holds: its name before the
+    renames that took effect after the file.  A rename entry with no old
+    name is an ``add_column``: a file written before it does not hold the
+    new column (even under that name, as a dropped or unrelated column),
+    so the column is left out and ``_adapt_to_schema`` fills it with
+    nulls."""
+    later = [(old, new) for eff, old, new in renames if eff > added_seq]
+    out = []
+    for c, t in cols:
+        name = c
+        for old, new in reversed(later):
+            if name == new:
+                name = old
+        if name is not None:
+            out.append((name, c, t))
+    return out
+
+
+# (family, width) of the types a parquet read widens — int32 reads as
+# int64 and float as double, never back
+_WIDTH = {
+    "tinyint": (0, 1), "smallint": (0, 2), "int": (0, 3), "bigint": (0, 4),
+    "float": (1, 1), "double": (1, 2),
+}
 
 
 class HyTable:
@@ -528,10 +656,15 @@ class HyTable:
             # pruning benefit of clustering applied to EVERY write, not
             # only after a rewrite_data_files compaction.
             df = df.sortWithinPartitions(*sort_by)
-        writer = df.write.mode("error")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(out_dir)
+        if not pcols and df.isLocal() and _driver_encodable(df.schema):
+            # rows already in the driver: encoding them there costs the
+            # rows, not a Spark write job's fixed cost
+            _write_local_frame(df, out_dir)
+        else:
+            writer = df.write.mode("error")
+            if pcols:
+                writer = writer.partitionBy(*pcols)
+            writer.parquet(out_dir)
         refs = []
         for dirpath, _, files in os.walk(out_dir):
             for fn in sorted(files):
@@ -800,11 +933,36 @@ class HyTable:
 
         return self._commit_files("create", meta, added=tuple(files))
 
+    def _written_schema(self, head: Snapshot | None, df: DataFrame, **changes) -> tuple[str, dict]:
+        """``(schema_ddl, summary changes)`` of a commit that wrote ``df``'s
+        rows onto ``head``.  Every live file must stay readable with the
+        table's schema (``table_schema``), so a column the table holds
+        keeps its type or widens within its family (``_WIDTH``): a
+        narrower write keeps the held type, a wider one also widens the
+        head's recorded ``table_schema``, and any other type change is
+        refused."""
+        held = dict(self.table_schema(head)) if head else {}
+        cols = []
+        for f in df.schema.fields:
+            t, h = f.dataType.simpleString(), held.get(f.name)
+            if h is not None and t != h:
+                if not (t in _WIDTH and h in _WIDTH and _WIDTH[t][0] == _WIDTH[h][0]):
+                    raise ValueError(
+                        f"column {f.name!r} is {h} in the table; rows of type {t} "
+                        "cannot be read with it"
+                    )
+                t = held[f.name] = max(t, h, key=_WIDTH.get)
+            cols.append((f.name, t))
+        if head and head.summary.get("table_schema"):
+            changes["table_schema"] = [[c, held[c]] for c, _ in head.summary["table_schema"]]
+        return _struct_ddl(cols), changes
+
     def _written_meta(self, df: DataFrame, partition_by: list[str] | None, **changes):
-        """``meta`` of a commit whose schema is that of the rows it wrote."""
-        return lambda head: (df.schema.simpleString(), {
-            **changes, **self._merged_partition_summary(head, df, partition_by),
-        })
+        """``meta`` of a commit whose schema is that of the rows it wrote
+        (``_written_schema``)."""
+        return lambda head: self._written_schema(
+            head, df, **changes, **self._merged_partition_summary(head, df, partition_by),
+        )
 
     def append(self, df: DataFrame, staged: bool = False) -> Snapshot:
         """Append commit: parent manifest + new files (Iceberg fast-append)."""
@@ -1181,9 +1339,17 @@ class HyTable:
         partition_by = list(snap.summary.get("partition_by", []))
         ptypes = dict(snap.summary.get("partition_types", {}))
         seq_by_path = {f.path: f.added_seq for f in refs}
+        target = self.table_schema(snap)
+        renames = [tuple(r) for r in snap.summary.get("renames", [])]
 
-        def _load(paths: list[str]) -> DataFrame:
-            df = self.spark.read.parquet(*paths)
+        def _load(paths: list[str], stripped=frozenset(), added_seq: int = 0) -> DataFrame:
+            # the manifest's schema as these files hold it, so building
+            # the scan infers nothing from a footer (no Spark job)
+            cols = _epoch_columns(
+                [(c, t) for c, t in target if c not in stripped], renames, added_seq
+            )
+            df = self.spark.read.schema(_read_schema((f, t) for f, _, t in cols)).parquet(*paths)
+            df = df.select(*[F.col(f).alias(c) for f, c, _ in cols])
             if with_meta:
                 # greedy .*/ anchors on the LAST data/ segment → the
                 # table-relative path, independent of URI scheme/root
@@ -1231,7 +1397,10 @@ class HyTable:
         keysets = {tuple(k for k, _ in f.partition) for f in refs}
         if not has_evolution and len(keysets) == 1 and next(iter(keysets)):
             keys = next(iter(keysets))
-            df = _load([os.path.join(self.root, f.path) for f in refs])
+            df = _load(
+                [os.path.join(self.root, f.path) for f in refs],
+                stripped={k for k in keys if k in ptypes},
+            )
             # the with_meta projection drops the _metadata pseudo-column;
             # its derived __file (table-relative path) carries the same
             # k=v segments
@@ -1261,7 +1430,7 @@ class HyTable:
             )
         out = None
         for (part, epoch), paths in sorted(groups.items()):
-            df = _load(paths)
+            df = _load(paths, stripped={c for c, _ in part if c in ptypes}, added_seq=epoch)
             for col, raw in part:
                 if col not in ptypes:
                     continue  # transform partition: source col is in the data
@@ -1271,7 +1440,7 @@ class HyTable:
                 )
                 df = df.withColumn(col, lit.cast(typ))
             if has_evolution:
-                df = self._adapt_to_schema(df, snap, epoch)
+                df = self._adapt_to_schema(df, target)
             out = df if out is None else out.unionByName(df)
         return out
 
@@ -1333,14 +1502,25 @@ class HyTable:
             # delete commits would not even compile a plan).
             from collections import defaultdict
 
+            # a delete file holds its columns under their names when it
+            # was written: group and join on their names now
+            target = self.table_schema(snap)
+            renames = [tuple(r) for r in snap.summary.get("renames", [])]
             by_cols: dict[tuple, list] = defaultdict(list)
             for ref in eq_dels:
-                by_cols[tuple(ref.delete_cols)].append(ref)
+                now = {f: (c, t) for f, c, t in _epoch_columns(target, renames, ref.added_seq)}
+                missing = [d for d in ref.delete_cols if d not in now]
+                if missing:
+                    raise ValueError(f"equality delete {ref.path}: no column {missing} in the table")
+                by_cols[tuple(now[d] for d in ref.delete_cols)].append(ref)
             for cols_t in sorted(by_cols):
-                cols = list(cols_t)
+                cols = [c for c, _ in cols_t]
                 parts = [
-                    self.spark.read.parquet(os.path.join(self.root, r.path))
-                    .select(*cols)
+                    self.spark.read.schema(
+                        _read_schema((d, t) for d, (_, t) in zip(r.delete_cols, cols_t))
+                    )
+                    .parquet(os.path.join(self.root, r.path))
+                    .toDF(*cols)
                     .distinct()
                     .withColumn("__dseq", F.lit(r.added_seq).cast("long"))
                     for r in by_cols[cols_t]
@@ -1353,7 +1533,7 @@ class HyTable:
                     cond = cond & (df[c] == del_all[c])
                 df = df.join(F.broadcast(del_all), cond, "left_anti")
         if pos_dels:
-            del_rows = self.spark.read.parquet(
+            del_rows = self.spark.read.schema("file_path string, pos bigint").parquet(
                 *[os.path.join(self.root, r.path) for r in pos_dels]
             ).selectExpr("file_path AS __file", "pos AS __pos").distinct()
             df = df.join(F.broadcast(del_rows), ["__file", "__pos"], "left_anti")
@@ -1690,43 +1870,47 @@ class HyTable:
     # The reference attaches a schema string to every commit
     # (TableMetadata.scala:15); evolution here is metadata-only commits:
     # summary["table_schema"] is the ordered (name, type) target and
-    # summary["renames"] the history [(effective_seq, old, new), ...].
+    # summary["renames"] the history [(effective_seq, old, new), ...],
+    # where an added column is a rename from no name (old None).
     # Old data files are adapted at read time (rename mapping + null-fill
     # for added columns) — no data rewrite, like Iceberg's field-id
     # evolution.
 
     def table_schema(self, snap: Snapshot | None = None) -> list[tuple[str, str]]:
+        """(name, type) of each column, from the snapshot's metadata —
+        the schema every read of its data files is built with."""
         snap = snap or self.current_snapshot()
         if snap is None:
             raise NoSuchSnapshot("table is empty")
         cols = snap.summary.get("table_schema")
         if cols:
             return [(c, t) for c, t in cols]
-        # derive from a data file footer via Spark schema
-        refs = self.data_files(snap)
-        if not refs:
-            return []
-        df = self.spark.read.parquet(os.path.join(self.root, refs[0].path))
-        out = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-        for col in snap.summary.get("partition_by", []):
-            if col not in [c for c, _ in out]:
-                out.append((col, snap.summary.get("partition_types", {}).get(col, "string")))
-        return out
+        # until a schema op declares one: the written schema, with the
+        # identity partition columns last, where a partitioned read puts them
+        partition_by = snap.summary.get("partition_by", [])
+        ptypes = snap.summary.get("partition_types", {})
+        return [(c, t) for c, t in _ddl_fields(snap.schema_ddl) if c not in partition_by] + [
+            (c, ptypes.get(c, "string")) for c in partition_by
+        ]
 
     def _schema_change(self, mutate, op_detail: str) -> Snapshot:
-        cur = self.current_snapshot()
-        if cur is None:
+        if self.current_snapshot() is None:
             raise NoSuchSnapshot("table is empty")
-        # until a schema op declares one, the schema is the files' (the
-        # same at every head; deriving it reads a footer, so only once)
-        derived = self.table_schema(cur)
 
         def meta(head):
             new_schema, new_renames = mutate(
-                self.table_schema(head) if head.summary.get("table_schema") else list(derived),
+                self.table_schema(head),
                 [tuple(r) for r in head.summary.get("renames", [])],
             )
-            return "struct<" + ",".join(f"{c}:{t}" for c, t in new_schema) + ">", {
+            # a live equality delete must still find its columns (a new
+            # rename takes effect after every live file)
+            stamped = [(eff or head.sequence_number + 1, o, n) for eff, o, n in new_renames]
+            for ref in [f for f in head.manifest if f.delete_cols]:
+                held = {f for f, _, _ in _epoch_columns(new_schema, stamped, ref.added_seq)}
+                lost = [d for d in ref.delete_cols if d not in held]
+                if lost:
+                    raise ValueError(f"{op_detail}: live equality deletes use {lost}")
+            return _struct_ddl(new_schema), {
                 "table_schema": [[c, t] for c, t in new_schema],
                 "renames": [list(r) for r in new_renames],
                 "change": op_detail,
@@ -1739,6 +1923,9 @@ class HyTable:
             if any(c == name for c, _ in schema):
                 raise ValueError(f"column {name!r} already exists")
             schema.append((name, ddl_type))
+            # the column has no name before this commit: no older file
+            # holds it, whatever column it once had under this name
+            renames.append((0, None, name))
             return schema, renames
 
         return self._schema_change(mutate, f"add:{name}")
@@ -1759,25 +1946,21 @@ class HyTable:
         def mutate(schema, renames):
             if not any(c == old for c, _ in schema):
                 raise ValueError(f"no column {old!r}")
+            if any(c == new for c, _ in schema):
+                raise ValueError(f"column {new!r} already exists")
             schema = [(new if c == old else c, t) for c, t in schema]
             renames.append((0, old, new))  # effective at the commit's seq
             return schema, renames
 
         return self._schema_change(mutate, f"rename:{old}->{new}")
 
-    def _adapt_to_schema(self, df: DataFrame, snap: Snapshot, added_seq: int) -> DataFrame:
-        """Adapt a file-epoch DataFrame to the snapshot's target schema:
-        apply renames that became effective after the file was written,
-        then null-fill added columns and project the target order."""
-        target = self.table_schema(snap)
-        if not target:
-            return df
-        for eff_seq, old, new in [tuple(r) for r in snap.summary.get("renames", [])]:
-            if eff_seq > added_seq and old in df.columns:
-                df = df.withColumnRenamed(old, new)
+    def _adapt_to_schema(self, df: DataFrame, target: list[tuple[str, str]]) -> DataFrame:
+        """Project a file-epoch DataFrame, already under the target names
+        (``_epoch_columns``), to the target schema's order, with nulls
+        for the columns its files do not hold."""
         keep_meta = [c for c in ("__file", "__pos", "__seq") if c in df.columns]
         cols = [
-            F.col(c).cast(t).alias(c) if c in df.columns else F.lit(None).cast(t).alias(c)
+            F.col(c) if c in df.columns else F.lit(None).cast(t).alias(c)
             for c, t in target
         ]
         return df.select(*cols, *[F.col(m) for m in keep_meta])
@@ -1789,11 +1972,10 @@ class HyTable:
     ) -> DataFileRef | None:
         import dataclasses
 
-        refs = self._write_data_files(rows)
+        # one file per delete commit: delete rows are few
+        refs = self._write_data_files(rows.coalesce(1))
         if not refs:
             return None
-        if len(refs) > 1:  # tiny files; keep one ref per delete commit
-            refs = self._write_data_files(rows.coalesce(1))
         return dataclasses.replace(
             refs[0], content=content, delete_cols=delete_cols, added_seq=0
         )
@@ -1809,7 +1991,7 @@ class HyTable:
         cur = self.current_snapshot()
         if cur is None:
             raise NoSuchSnapshot("table is empty")
-        matching = self.read(preds=preds).select(delete_cols).distinct().coalesce(1)
+        matching = self.read(preds=preds).select(delete_cols).distinct()
         ref = self._write_delete_file(matching, "equality_delete", tuple(delete_cols))
         if ref is None or ref.row_count == 0:
             return cur
@@ -1830,7 +2012,6 @@ class HyTable:
             self._read_refs(cur, affected, with_meta=True)
             .filter(self._preds_to_column(preds))
             .selectExpr("__file AS file_path", "__pos AS pos")
-            .coalesce(1)
         )
         ref = self._write_delete_file(rows, "position_delete", ())
         if ref is None or ref.row_count == 0:
@@ -1861,14 +2042,14 @@ class HyTable:
             return self.create(source)
         partition_by, _ = self.partition_spec()
         data_files = self._write_data_files(source, partition_by or None)
-        keys = source.select(key_cols).distinct().coalesce(1)
+        keys = source.select(key_cols).distinct()
         del_ref = self._write_delete_file(keys, "equality_delete", tuple(key_cols))
         return self._commit_files(
             "upsert_mor",
-            lambda head: (source.schema.simpleString(), {
-                "added_files": len(data_files),
-                "delete_rows": del_ref.row_count if del_ref else 0,
-            }),
+            lambda head: self._written_schema(
+                head, source, added_files=len(data_files),
+                delete_rows=del_ref.row_count if del_ref else 0,
+            ),
             added=tuple(data_files) + ((del_ref,) if del_ref else ()),
         )
 
@@ -1943,7 +2124,7 @@ class HyTable:
         files = self._write_data_files(df, self._spec(self.branch_head(name)) or None)
         return self._commit_files(
             "branch_append",
-            lambda head: (df.schema.simpleString(), {"branch": name}),
+            lambda head: self._written_schema(head, df, branch=name),
             added=tuple(files), staged=True, branch=name,
         )
 

@@ -194,7 +194,8 @@ def test_lease_gc_floor_query_job_budget(spark, count_jobs, tmp_path):
     """The query's result rows are a driver-held frame built in metric
     order, so returning them costs no Spark job and no sort: the jobs
     left are the table writes and reads of its lifecycle (13 when the
-    rows went through a Python RDD and an ``orderBy``)."""
+    rows went through a Python RDD and an ``orderBy``, 10 while each
+    table read inferred its schema from a footer)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -213,6 +214,6 @@ def test_lease_gc_floor_query_job_budget(spark, count_jobs, tmp_path):
     load_table(spark, sf_dir, "nation")  # its schema read is set-up, not query work
     with count_jobs() as jobs:
         rows = lease_gc_floor(spark, sf_dir).collect()
-    assert jobs.n <= 10
+    assert jobs.n <= 8
     assert [r.metric for r in rows] == sorted(r.metric for r in rows)
     assert dict((r.metric, r.value) for r in rows)["post_gc_leased_rows"] == 15

@@ -6,11 +6,14 @@ component over in-memory/tmp adapters.
 
 import os
 import time
+from datetime import date, datetime
+from decimal import Decimal
 
 import pytest
 
 from iceberg_hybrid_spark.lake import gc as G
 from iceberg_hybrid_spark.lake.table import CommitConflict, HyTable, NoSuchSnapshot
+from iceberg_hybrid_spark.session import local_frame
 
 
 def make_df(spark, lo, hi):
@@ -171,10 +174,12 @@ def test_expire_keeps_shared_files(spark, tmp_table_root):
 
 def test_expire_leaves_only_live_files_and_their_sidecars(spark, tmp_table_root):
     """Expiry deletes a dead data file's Hadoop ``.crc`` sidecar with it,
-    and then its commit directory once that is empty."""
+    and then its commit directory once that is empty — for a file Spark
+    wrote and for one encoded in the driver."""
     t = HyTable(spark, tmp_table_root)
     t.create(make_df(spark, 0, 20).repartition(2))
-    dead = t.append(make_df(spark, 20, 30)).manifest
+    t.append(make_df(spark, 20, 30))
+    dead = t.append(local_frame(spark, [(i, i * 2) for i in range(30, 35)], "id bigint, doubled bigint")).manifest
     t.rewrite_data_files()
     result = t.expire_snapshots(retain_last=1)
     live = {f.path for f in t.current_snapshot().manifest}
@@ -187,7 +192,133 @@ def test_expire_leaves_only_live_files_and_their_sidecars(spark, tmp_table_root)
         assert dirs or files, f"empty directory left: {dirpath}"
         left |= {os.path.relpath(os.path.join(dirpath, f), t.root) for f in files}
     assert live <= left <= allowed
-    assert t.read().count() == 30
+    assert t.read().count() == 35
+
+
+# ---- the two writers: driver-held rows are encoded in the driver ----------
+
+PARITY_DDL = (
+    "a bigint, b int, c double, d boolean, e string, f decimal(10,2), g date, "
+    "h timestamp, i array<int>"
+)
+PARITY_ROWS = [
+    (1, 2, 1.5, True, "x", Decimal("1.25"), date(2020, 1, 2),
+     datetime(2020, 1, 2, 3, 4, 5), [1, None, 3]),
+    (None,) * 9,
+    (-3, -4, -2.0, False, "yy", Decimal("-3.50"), date(2021, 6, 1),
+     datetime(2021, 6, 1, 0, 0, 1, 500), []),
+]
+
+
+def _new_files(snap):
+    return [f for f in snap.manifest if f.added_seq == snap.sequence_number]
+
+
+def test_driver_and_spark_writers_agree(spark, tmp_path):
+    """The same rows written from a driver-held frame and through Spark's
+    writer read back equal, under one schema, with equal manifest stats;
+    Spark infers the same schema from either file's footer."""
+    local = local_frame(spark, PARITY_ROWS, PARITY_DDL)
+    planned = spark.createDataFrame(PARITY_ROWS, PARITY_DDL).coalesce(1)
+    assert local.isLocal() and not planned.isLocal()
+    tables = [HyTable(spark, str(tmp_path / n)) for n in ("driver", "spark")]
+    refs = []
+    for t, df in zip(tables, (local, planned)):
+        (ref,) = t.create(df).manifest
+        refs.append(ref)
+    driver, written = refs
+    assert (driver.row_count, driver.stats, driver.null_counts) == (
+        written.row_count, written.stats, written.null_counts
+    )
+    assert driver.row_count == 3 and dict(driver.null_counts)["f"] == 1
+    reads = [t.read() for t in tables]
+    assert reads[0].schema == reads[1].schema
+    assert sorted(reads[0].collect(), key=repr) == sorted(reads[1].collect(), key=repr)
+    footers = [spark.read.parquet(os.path.join(t.root, r.path)).schema for t, r in zip(tables, refs)]
+    assert footers[0] == footers[1]
+
+
+def test_driver_written_file_is_checksummed(spark, tmp_table_root):
+    """A driver-written file has the Hadoop ``.crc`` sidecar Spark's files
+    have, so a read of a corrupted file fails instead of returning bad
+    rows."""
+    t = HyTable(spark, tmp_table_root)
+    (ref,) = t.create(local_frame(spark, [(i, str(i)) for i in range(200)], "id bigint, s string")).manifest
+    path = os.path.join(t.root, ref.path)
+    d, name = os.path.split(path)
+    assert sorted(os.listdir(d)) == [f".{name}.crc", name]
+    assert t.read().count() == 200
+    with open(path, "r+b") as fh:
+        fh.seek(8)
+        b = fh.read(1)
+        fh.seek(8)
+        fh.write(bytes([b[0] ^ 0xFF]))
+    with pytest.raises(Exception, match="ChecksumException"):
+        t.read().collect()
+
+
+def test_read_builds_without_a_spark_job(spark, tmp_table_root, count_jobs):
+    """The read schema comes from the manifest: building a scan infers
+    nothing from a footer."""
+    t = HyTable(spark, tmp_table_root)
+    t.create(make_df(spark, 0, 20))
+    t.append(make_df(spark, 20, 30))
+    with count_jobs() as jobs:
+        df = t.read()
+    assert jobs.n == 0
+    assert df.count() == 30
+
+
+def test_local_append_is_encoded_in_the_driver(spark, tmp_table_root, count_jobs):
+    """Appending driver-held rows runs no Spark write: at most the Arrow
+    collect of the rows, and one file plus its sidecar."""
+    t = HyTable(spark, tmp_table_root)
+    t.create(make_df(spark, 0, 20))
+    batch = local_frame(spark, [(i, i * 2) for i in range(20, 520)], "id bigint, doubled bigint")
+    with count_jobs() as jobs:
+        snap = t.append(batch)
+    assert jobs.n <= 1
+    (ref,) = _new_files(snap)
+    d, name = os.path.split(os.path.join(t.root, ref.path))
+    assert sorted(os.listdir(d)) == [f".{name}.crc", name]
+    assert ref.row_count == 500 and t.read().count() == 520
+
+
+def test_planned_append_is_written_by_spark(spark, tmp_table_root, count_jobs):
+    """A frame Spark must compute (not ``isLocal()``) goes through Spark's
+    writer: one file per task."""
+    t = HyTable(spark, tmp_table_root)
+    t.create(make_df(spark, 0, 20))
+    with count_jobs() as jobs:
+        snap = t.append(spark.range(20, 60, numPartitions=2).selectExpr("id", "id * 2 AS doubled"))
+    assert jobs.n >= 1
+    assert len(_new_files(snap)) == 2 and t.read().count() == 60
+
+
+def test_empty_local_batch_commits_one_zero_row_file(spark, tmp_table_root):
+    """As Spark's writer does, an empty batch commits one zero-row file."""
+    t = HyTable(spark, tmp_table_root)
+    t.create(make_df(spark, 0, 20))
+    snap = t.append(local_frame(spark, [], "id bigint, doubled bigint"))
+    assert [f.row_count for f in _new_files(snap)] == [0]
+    assert t.read().count() == 20
+
+
+def test_local_batch_arrow_cannot_carry_goes_through_spark(spark, tmp_table_root, count_jobs):
+    """A year-month interval has no Arrow type: a driver-held batch with
+    one is written by Spark's writer, as any other frame is."""
+    t = HyTable(spark, tmp_table_root)
+    batch = spark.sql("VALUES (1, INTERVAL '2' YEAR)")
+    assert batch.isLocal()
+    with count_jobs() as jobs:
+        t.create(batch)
+    assert jobs.n >= 1
+    df = t.read()
+    assert dict(df.dtypes)["col2"] == "interval year"
+    # Python cannot hold a year-month interval: compare its text
+    assert [tuple(r) for r in df.selectExpr("col1", "CAST(col2 AS STRING)").collect()] == [
+        (1, "INTERVAL '2' YEAR")
+    ]
 
 
 def test_orphan_detection_and_removal(spark, tmp_table_root):
