@@ -55,7 +55,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as SPARK_T
 
-from ..session import local_frame
+from ..session import as_nullable, local_frame
 
 _META = "_meta"
 _DATA = "data"
@@ -392,21 +392,6 @@ def _parse_hive_partition(rel_dir: str) -> tuple[tuple[str, str], ...]:
     return tuple(parts)
 
 
-def _as_nullable(dt: SPARK_T.DataType) -> SPARK_T.DataType:
-    """``dt`` with every field, element and value nullable — the schema
-    Spark's parquet writer records for any frame."""
-    if isinstance(dt, SPARK_T.StructType):
-        return SPARK_T.StructType([
-            SPARK_T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
-            for f in dt.fields
-        ])
-    if isinstance(dt, SPARK_T.ArrayType):
-        return SPARK_T.ArrayType(_as_nullable(dt.elementType), True)
-    if isinstance(dt, SPARK_T.MapType):
-        return SPARK_T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
-    return dt
-
-
 _CRC_CHUNK = 512
 
 
@@ -460,7 +445,7 @@ def _write_local_frame(df: DataFrame, out_dir: str) -> None:
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = _as_nullable(df.schema)
+    schema = as_nullable(df.schema)
     table = df.toArrow().cast(to_arrow_schema(schema)).replace_schema_metadata({
         "org.apache.spark.version": df.sparkSession.version,
         "org.apache.spark.sql.parquet.row.metadata": schema.json(),
@@ -1349,7 +1334,10 @@ class HyTable:
                 [(c, t) for c, t in target if c not in stripped], renames, added_seq
             )
             df = self.spark.read.schema(_read_schema((f, t) for f, _, t in cols)).parquet(*paths)
-            df = df.select(*[F.col(f).alias(c) for f, c, _ in cols])
+            if any(f != c for f, c, _ in cols):
+                # one call renames every column (each call is a py4j
+                # round trip and an analysis); the bare relation needs none
+                df = df.toDF(*[c for _, c, _ in cols])
             if with_meta:
                 # greedy .*/ anchors on the LAST data/ segment → the
                 # table-relative path, independent of URI scheme/root

@@ -12,7 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def default_parallelism() -> int:
@@ -146,6 +146,21 @@ def reset_broadcast_threshold(spark: SparkSession) -> None:
     spark.conf.set(
         "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
     )
+
+
+def as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable: the schema
+    Spark's parquet writer records for any frame, and the one its file
+    sources read with."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, as_nullable(f.dataType), True, f.metadata) for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(as_nullable(dt.keyType), as_nullable(dt.valueType), True)
+    return dt
 
 
 def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:

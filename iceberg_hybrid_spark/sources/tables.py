@@ -5,14 +5,27 @@ The driver's testdata is one parquet file per table per scale factor
 "table" would be a directory of many files — ``spark.read.parquet`` takes
 either, so nothing here changes at scale.  Filters and projections applied
 by callers push down into the scan (Catalyst → parquet footer min/max).
+
+``load_table`` reads the table's schema from one parquet footer in the
+driver (pyarrow) — the file itself, or a directory's summary file or else
+its first data file in sorted order, the footer Spark's own inference
+reads — and hands it to ``spark.read.schema``, so registering a table runs
+no Spark job.  Spark's inference (a one-task job) reads only footers whose
+types Spark reads differently from their Arrow type.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import weakref
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from ..session import as_nullable
 
 TABLE_NAMES = (
     "region",
@@ -84,12 +97,84 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Where Spark's parquet writer keeps the frame's schema; Spark's inference
+# takes a footer's schema from it when it is there.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+# The Arrow types a footer reports that Spark's parquet reader reads as
+# ``from_arrow_type`` converts them.  Not here, so Spark infers: unsigned
+# ints (Spark widens them), nanosecond timestamps (INT96 is a timestamp,
+# TIMESTAMP(NANOS) a bigint under nanosAsLong), dictionaries and durations
+# (Arrow-only types over plain parquet columns), binaries (strings under
+# binaryAsString, as ENUM-annotated ones always are), time, date64,
+# decimal256, null.
+_FOOTER_ATOMIC = (
+    pa.types.is_boolean, pa.types.is_signed_integer, pa.types.is_float32,
+    pa.types.is_float64, pa.types.is_decimal128, pa.types.is_string,
+    pa.types.is_large_string, pa.types.is_date32,
+)
+
+
+def _arrow_convertible(at: pa.DataType) -> bool:
+    """Whether Spark reads a parquet column Arrow reports as ``at`` as the
+    type ``from_arrow_type`` gives for ``at``."""
+    if pa.types.is_struct(at):
+        return all(_arrow_convertible(f.type) for f in at)
+    if pa.types.is_list(at) or pa.types.is_large_list(at):
+        return _arrow_convertible(at.value_type)
+    if pa.types.is_map(at):
+        return _arrow_convertible(at.key_type) and _arrow_convertible(at.item_type)
+    if pa.types.is_timestamp(at):
+        return at.unit != "ns"
+    return any(is_t(at) for is_t in _FOOTER_ATOMIC)
+
+
+# Summary files Spark's inference reads before any data file, in this order.
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _footer_file(path: str) -> str | None:
+    """The file whose footer Spark infers ``path``'s schema from: ``path``
+    itself; for a directory, its summary file, else its first data file in
+    sorted order (Spark's listing skips names starting with ``_`` or
+    ``.``).  None for an empty directory, and for a partitioned one: its
+    subdirectories add columns no footer holds."""
+    if not os.path.isdir(path):
+        return path
+    names = os.listdir(path)
+    data = sorted(n for n in names if not n.startswith(("_", ".")))
+    if not data or any(os.path.isdir(os.path.join(path, n)) for n in data):
+        return None
+    summary = [n for n in _SUMMARY_FILES if n in names]
+    return os.path.join(path, (summary or data)[0])
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, read from one footer
+    in the driver, or None where only Spark's inference gives it."""
+    footer = _footer_file(path)
+    if footer is None:
+        return None
+    arrow = pq.read_schema(footer)
+    spark_json = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json is not None:
+        schema = StructType.fromJson(json.loads(spark_json))
+    elif all(_arrow_convertible(f.type) for f in arrow):
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
+    else:
+        return None
+    return as_nullable(schema)
+
+
 # Per-session DataFrame cache.  The testdata lake is immutable and a
 # DataFrame is just an analyzed plan, so re-handing the same object out
-# skips the file listing + footer schema read (several py4j round trips
-# per call — measured ~0.2-0.5 s of plan-build time per multi-table
-# query).  Keyed weakly on the session so a stopped session's plans
-# never leak into its successor.
+# skips the file listing, the driver's footer read and the relation's
+# analysis (several py4j round trips per call — measured ~0.2-0.5 s of
+# plan-build time per multi-table query).  Keyed weakly on the session so
+# a stopped session's plans never leak into its successor.
 _CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -102,22 +187,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None:
         return cached
     if name == "events":
-        # The events parquet stores ts as INT64 TIMESTAMP(NANOS), which a
-        # vanilla Spark session rejects outright (PARQUET_TYPE_ILLEGAL).
-        # Callers may hand us a SparkSession we didn't build (the harness
-        # does), so set the legacy conf here at runtime — it's a session
-        # conf, idempotent, and safe to flip before every events read.
+        # An events file that stores ts as INT64 TIMESTAMP(NANOS) (the
+        # fixtures store TIMESTAMP(MICROS)) is one a vanilla Spark session
+        # rejects outright (PARQUET_TYPE_ILLEGAL).  Callers may hand us a
+        # SparkSession we didn't build (the harness does), so set the
+        # legacy conf here at runtime — it's a session conf, idempotent,
+        # and safe to flip before every events read.
         if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    schema = _footer_schema(spark, path)
+    if schema is None:
+        df = spark.read.parquet(path)
+    else:
+        df = spark.read.schema(schema).parquet(path)
     if name == "events":
-        # ts is TIMESTAMP(NANOS) in the file; with nanosAsLong it arrives
-        # as int64 nanos.  Floor-divide to micros (matches DuckDB's
-        # ns→µs truncation) and restore a proper timestamp column.
+        # A TIMESTAMP(NANOS) ts arrives as int64 nanos under nanosAsLong.
+        # Floor-divide to micros (matches DuckDB's ns→µs truncation) and
+        # restore a proper timestamp column.
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType
 
-        if isinstance(df.schema["ts"].dataType, LongType):
+        ts = (df.schema if schema is None else schema)["ts"].dataType
+        if isinstance(ts, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if name in FOLD_HEAVY_TABLES:
         df = _ensure_scan_parallelism(spark, df)

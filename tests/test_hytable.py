@@ -269,6 +269,16 @@ def test_read_builds_without_a_spark_job(spark, tmp_table_root, count_jobs):
     assert df.count() == 30
 
 
+def test_unevolved_read_is_the_bare_relation(spark, tmp_table_root):
+    """Files whose names are the table's read as they are: no projection
+    over the scan."""
+    t = HyTable(spark, tmp_table_root)
+    t.create(make_df(spark, 0, 20))
+    t.append(make_df(spark, 20, 30))
+    plan = t.read()._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LogicalRelation"
+
+
 def test_local_append_is_encoded_in_the_driver(spark, tmp_table_root, count_jobs):
     """Appending driver-held rows runs no Spark write: at most the Arrow
     collect of the rows, and one file plus its sidecar."""
