@@ -7,15 +7,13 @@ should engage.  Policy mirrors the doc:
 
 - failure rate above threshold → multiplicative backoff;
 - healthy + lag under target → additive recovery up to the cap;
-- lag beyond the hard limit → write-side gating (slow the producer);
-- newest-snapshot-first prioritization is exposed as a sort key helper.
+- lag beyond the hard limit → write-side gating (slow the producer).
 
-This is the driver-side control loop.  The replication stream
-(``streaming.sync_stream.start_replication_stream``) ticks it per drained
-commit and exposes ``RateController.gate_writes`` as the write-side gating
-signal; that is the only output anything acts on.  The concurrency budget
-is computed and kept in ``RateController.decisions`` but drives no copy:
-replication copies one file at a time in the driver.
+The policy's one caller is the oracle-checked
+``queries.lake_ops.backpressure_budget_trajectory`` query, which folds a
+day-by-day observation series through ``RateController.tick``.  No sync
+path reads the budget: replication copies one file at a time in the
+driver, and ``coordinate_write`` gates on the commit gate alone.
 """
 
 from __future__ import annotations
@@ -65,38 +63,15 @@ def next_budget(
 
 
 class RateController:
-    """Stateful wrapper over ``next_budget`` — one instance per
-    replication worker.  ``tick()`` feeds the latest observations and
-    returns the budget for the next drain; the decision history is kept
-    for observability/tests (≙ the doc's control loop emitting its rate
-    decisions as metrics)."""
+    """Stateful wrapper over ``next_budget`` with the default policy:
+    ``tick()`` feeds the latest observations and returns the decision;
+    the next tick starts from its concurrency (≙ the doc's control
+    loop)."""
 
-    def __init__(self, cfg: BackpressureConfig = BackpressureConfig(),
-                 initial_concurrency: int | None = None):
-        self.cfg = cfg
-        self.concurrency = initial_concurrency or cfg.max_concurrency
-        self.gate_writes = False
-        self.decisions: list[BackpressureDecision] = []
-        # last observed copy failure rate — lives on the controller (not
-        # the consuming stream) so it survives a streaming-query restart
-        # after a failed batch and the retry ticks into backoff
-        self.last_failure_rate = 0.0
-
-    def record_failure(self) -> None:
-        self.last_failure_rate = 1.0
-
-    def record_success(self) -> None:
-        self.last_failure_rate = 0.0
+    def __init__(self):
+        self.concurrency = BackpressureConfig().max_concurrency
 
     def tick(self, failure_rate: float, mirror_lag_s: float) -> BackpressureDecision:
-        d = next_budget(self.concurrency, failure_rate, mirror_lag_s, self.cfg)
+        d = next_budget(self.concurrency, failure_rate, mirror_lag_s)
         self.concurrency = d.concurrency
-        self.gate_writes = d.gate_writes
-        self.decisions.append(d)
         return d
-
-
-def snapshot_priority_key(sequence_number: int, is_latest: bool) -> tuple:
-    """Prioritize the newest snapshot (doc: catch-up syncs serve the head
-    first, then backfill): sort ascending by this key."""
-    return (0 if is_latest else 1, -sequence_number)

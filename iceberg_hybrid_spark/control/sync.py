@@ -11,11 +11,20 @@ and SyncOrchestrator.processPendingEvents (modules/application/SyncOrchestrator.
   filters (pending / failed / history) and pagination.
 - ``process_pending_events``: drain a region's Pending queue; per-event
   Pending→InProgress→Completed/Failed transitions; MetadataSync registers
-  placement, DataSync runs the replication pipeline (plan→copy→verify→
-  promote); returns SyncProgress.
+  placement; returns SyncProgress.
 
-The streaming twin (readStream + foreachBatch) is
-``iceberg_hybrid_spark.streaming.sync_stream``.
+A DataSync is level-triggered: it brings the mirror to the source's
+*current* snapshot (plan → copy → verify → promote), whatever commit the
+event names, and does nothing when the mirror's visible head already
+carries that snapshot.  So a backlog of k commits drains with one
+replicate per (table, region), the older events and an event whose
+commit has since been expired complete without copying, and a drain
+converges from any mirror state — the reference's fast-forward sync
+(iceberg-arch-hybrid-replica-dr.md:140-142).  A source table with no
+snapshot fails its DataSync.
+
+``streaming.sync_stream.start_coordinator_stream`` feeds this drain from
+a durable event directory (readStream + foreachBatch).
 """
 
 from __future__ import annotations
@@ -27,7 +36,7 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as SPARK_T
 
-from ..lake.replication import ReplicationMetrics, replicate
+from ..lake.replication import replicate
 from ..lake.table import HyTable, Snapshot
 from ..session import local_frame
 from .gate import CommitGate, GateDecision
@@ -280,14 +289,18 @@ class MultiRegionCoordinator:
             mirror = target_tables[ev.table] = HyTable(self.spark, path)
         self.registry.register_table_location(ev.table, ev.target_region, mirror.root)
 
-    def _process_data_sync(self, ev: SyncEvent) -> ReplicationMetrics:
-        """Replicate data src→target: plan (diff+skip-if-exists) →
-        copy → verify → promote (SyncOrchestrator.scala:89-132)."""
+    def _process_data_sync(self, ev: SyncEvent) -> None:
+        """Bring the mirror to the source head: plan (diff+skip-if-exists)
+        → copy → verify → promote (SyncOrchestrator.scala:89-132), unless
+        the mirror's visible head already carries it."""
         src = self.catalogs[ev.source_region][ev.table]
         dst = self.catalogs[ev.target_region][ev.table]
-        src_seq = src.snapshot_by_id(ev.commit_id).sequence_number
-        _, metrics = replicate(src, dst, target_seq=src_seq)
-        return metrics
+        head = src.current_snapshot()
+        if head is None:
+            raise LookupError(f"{ev.table} has no snapshot at {ev.source_region}")
+        carried = dst.current_snapshot()
+        if carried is None or carried.summary.get("replicated_from") != head.snapshot_id:
+            replicate(src, dst)
 
     def retry_failed_events(self) -> int:
         """Fold over failed events, reset to Pending, count successes

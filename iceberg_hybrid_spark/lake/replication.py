@@ -56,9 +56,10 @@ class VerificationError(Exception):
     """A replicated file is missing or size-mismatched (StateReconciler raise)."""
 
 
-def plan(src: HyTable, dst: HyTable, target_seq: int | None = None) -> list[DataFileRef]:
-    """Files needing copy: target snapshot's manifest minus files already
-    present at the destination with the right size.
+def plan(src: HyTable | Snapshot, dst: HyTable) -> list[DataFileRef]:
+    """Files needing copy: the manifest of ``src`` (a snapshot, or a
+    table's current snapshot) minus files already present at the
+    destination with the right size.
 
     Two dedup tiers, mirroring the reference: the destination's latest
     manifest (the "inventory index" probe) and a filesystem stat probe
@@ -66,9 +67,7 @@ def plan(src: HyTable, dst: HyTable, target_seq: int | None = None) -> list[Data
     — not via intermediate versions — is the fast-forward optimization
     (iceberg-arch-hybrid-replica-dr.md:140-142).
     """
-    src_snap = (
-        src.snapshot_by_seq(target_seq) if target_seq is not None else src.current_snapshot()
-    )
+    src_snap = src if isinstance(src, Snapshot) else src.current_snapshot()
     if src_snap is None:
         return []
     dst_snap = dst.current_snapshot() if dst.exists() else None
@@ -330,23 +329,22 @@ def audit_closure(table: HyTable) -> dict:
     }
 
 
-def replicate(
-    src: HyTable, dst: HyTable, target_seq: int | None = None
-) -> tuple[Snapshot | None, ReplicationMetrics]:
-    """Full pipeline: plan → copy → staged shadow-commit → verify → promote.
+def replicate(src: HyTable, dst: HyTable) -> tuple[Snapshot | None, ReplicationMetrics]:
+    """Full pipeline: plan → copy → staged shadow-commit → verify → promote,
+    of the source's current snapshot.
 
     The destination only ever exposes fully-verified snapshots: the shadow
     commit is staged (invisible), verification runs against the copied
     bytes, and promotion is the atomic CAS publish — the two-phase marker
     protocol (_inprogress → verify → _ready,
     iceberg-arch-hybrid-replica-dr.md:90-104) without hand-copied metadata.
+    The source head is read once, so a commit landing mid-pipeline cannot
+    make it copy one snapshot's files and stage another's manifest.
     """
-    src_snap = (
-        src.snapshot_by_seq(target_seq) if target_seq is not None else src.current_snapshot()
-    )
+    src_snap = src.current_snapshot()
     if src_snap is None:
         return None, ReplicationMetrics(0, 0, 0, 0)
-    todo = plan(src, dst, target_seq)
+    todo = plan(src_snap, dst)
     metrics = copy_files(src.root, dst.root, todo)
 
     # Shadow-commit the source's files and table metadata (staged) in

@@ -720,6 +720,9 @@ class HyTable:
         "partition_transforms", "write_distribution", "write_sort_order",
         "table_schema", "renames",
     )
+    # the source snapshot a replica carries: the staged shadow commit
+    # records it, and publish keeps it in the visible head
+    _ORIGIN_KEYS = ("replicated_from", "source_seq")
 
     def _commit_files(
         self,
@@ -1019,7 +1022,8 @@ class HyTable:
                     "is not an ancestor of the staged snapshot (a commit "
                     "landed after staging; re-stage on the new head)"
                 )
-            return staged.schema_ddl, {"published_from": snapshot_id}
+            origin = {k: v for k, v in staged.summary.items() if k in self._ORIGIN_KEYS}
+            return staged.schema_ddl, {"published_from": snapshot_id, **origin}
 
         return self._commit_files(
             "publish", meta, added=staged.manifest,

@@ -12,7 +12,10 @@ scheduled drain (SyncOrchestrator.processPendingEvents) map to:
 - ``applyInPandasWithState`` for per-key stateful status tracking (the
   Pending→InProgress→Completed/Failed state machine),
 - ``foreachBatch`` to run the batch orchestrator incrementally
-  (the Spark translation SURVEY §3.2 prescribes).
+  (the Spark translation SURVEY §3.2 prescribes):
+  ``start_coordinator_stream`` tails a durable sync-event directory and
+  hands each micro-batch to ``MultiRegionCoordinator.process_pending_events``,
+  the package's one sync driver.
 
 Late data policy: the watermark bounds state; events older than the
 watermark are dropped by the engine — the tests pin this behavior.
@@ -20,7 +23,6 @@ watermark are dropped by the engine — the tests pin this behavior.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable, Iterable
 
 import pandas as pd
@@ -182,85 +184,6 @@ def status_transition_tracker(events: DataFrame) -> DataFrame:
     )
 
 
-# ---- streaming replication worker ------------------------------------------
-
-COMMIT_NOTIFICATION_SCHEMA = SPARK_T.StructType([
-    SPARK_T.StructField("table_name", SPARK_T.StringType()),
-    SPARK_T.StructField("target_seq", SPARK_T.LongType()),
-])
-
-
-def start_replication_stream(
-    spark: SparkSession,
-    notifications_dir: str,
-    resolve: Callable[[str], tuple],
-    checkpoint_dir: str,
-    available_now: bool = True,
-    controller=None,
-):
-    """The streaming form of SyncOrchestrator.processPendingEvents
-    (SURVEY §3.2's prescribed translation): commit notifications arrive as
-    a file stream; each micro-batch drains them by running the replication
-    pipeline (plan → copy → verify → promote) per notified commit.
-
-    ``resolve(table_name) -> (src HyTable, dst HyTable)``.  Exactly-once:
-    the checkpoint tracks consumed notification files, and replication
-    itself is idempotent (skip-if-exists + staged promote).
-
-    ``controller`` (a ``control.backpressure.RateController``) runs the
-    control loop of iceberg-arch-hybrid-replica-dr.md:172-185: before
-    each replicate it is ticked with the last copy's failure rate and the
-    observed mirror lag (now − source commit timestamp), and
-    ``controller.gate_writes`` exposes the write-side gating signal for
-    producers to honor; the tick's decision (backoff / recovery, kept in
-    ``controller.decisions``) is recorded, not applied to the copy, which
-    runs one file at a time in the driver.  A failed replicate records a
-    failure on the controller, so the retry's tick backs off.
-    """
-    from ..lake.replication import replicate
-
-    stream = spark.readStream.schema(COMMIT_NOTIFICATION_SCHEMA).parquet(
-        notifications_dir
-    )
-
-    def drain(batch_df: DataFrame, _batch_id: int) -> None:
-        # newest target_seq per table wins (fast-forward: intermediate
-        # versions are skipped — iceberg-arch-hybrid-replica-dr.md:140-142)
-        work = (
-            batch_df.groupBy("table_name")
-            .agg(F.max("target_seq").alias("target_seq"))
-            .collect()
-        )
-        for row in work:
-            src, dst = resolve(row.table_name)
-            if controller is not None:
-                snap = src.snapshot_by_seq(row.target_seq)
-                lag_s = max(0.0, time.time() - snap.timestamp_ms / 1000.0)
-                controller.tick(controller.last_failure_rate, lag_s)
-            try:
-                replicate(src, dst, target_seq=row.target_seq)
-            except Exception:
-                # A failed copy/verify raises (per-file results don't
-                # surface) — record a 100% failure observation on the
-                # CONTROLLER (it outlives this query) so the retry's
-                # tick takes the multiplicative-backoff path, then
-                # re-raise: the checkpoint doesn't advance and the
-                # batch retries at the reduced budget.
-                if controller is not None:
-                    controller.record_failure()
-                raise
-            if controller is not None:
-                # a replicate that returned copied everything it planned
-                controller.record_success()
-
-    writer = stream.writeStream.foreachBatch(drain).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 # ---- foreachBatch orchestration --------------------------------------------
 
 def sync_events_foreach_batch(
@@ -330,8 +253,8 @@ def start_coordinator_stream(
 
     Delivery is exactly-once per FILE (checkpointed source) and
     at-least-once per event across republishes; the drain dedups by
-    event_id and replication itself is idempotent (skip-if-exists +
-    staged promote), so duplicates are no-ops.
+    event_id, and a DataSync is level-triggered (a mirror that already
+    carries the source head is left alone), so duplicates are no-ops.
     """
     from ..control.sync import PENDING, SyncEvent
 
@@ -366,9 +289,4 @@ def start_coordinator_stream(
             ))
         coordinator.process_pending_events(region)
 
-    writer = stream.writeStream.foreachBatch(drain).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return sync_events_foreach_batch(stream, drain, checkpoint_dir, available_now)

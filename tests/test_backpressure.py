@@ -1,7 +1,6 @@
 from iceberg_hybrid_spark.control.backpressure import (
     BackpressureConfig,
     next_budget,
-    snapshot_priority_key,
 )
 
 
@@ -35,13 +34,6 @@ def test_steady_state_drifts_to_cap():
 def test_failing_and_lagging_gates_and_backs_off():
     d = next_budget(16, failure_rate=0.02, mirror_lag_s=3600)
     assert d.concurrency == 8 and d.gate_writes
-
-
-def test_newest_snapshot_first():
-    items = [(3, False), (7, True), (5, False)]
-    ordered = sorted(items, key=lambda x: snapshot_priority_key(*x))
-    assert ordered[0] == (7, True)
-    assert [s for s, _ in ordered[1:]] == [5, 3]
 
 
 def test_budget_trajectory_query_exercises_every_branch(spark):

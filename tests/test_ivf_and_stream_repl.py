@@ -1,4 +1,4 @@
-"""IVF ANN recall vs brute force; streaming replication worker."""
+"""IVF ANN recall vs brute force."""
 
 import random
 
@@ -6,11 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from iceberg_hybrid_spark.functions import similarity as S
-from iceberg_hybrid_spark.lake.table import HyTable
-from iceberg_hybrid_spark.streaming.sync_stream import (
-    COMMIT_NOTIFICATION_SCHEMA,
-    start_replication_stream,
-)
 
 
 @pytest.fixture(scope="module")
@@ -59,32 +54,6 @@ def test_ivf_probes_limit_candidates(emb):
     probed = out.count()
     total = emb.count()
     assert probed < total / 2  # one list ≈ total/8
-
-
-def test_streaming_replication_worker(spark, tmp_path):
-    src = HyTable(spark, str(tmp_path / "us" / "t"))
-    dst = HyTable(spark, str(tmp_path / "eu" / "t"))
-    src.create(spark.range(0, 100).toDF("id"))
-    src.append(spark.range(100, 150).toDF("id"))
-    notif_dir = str(tmp_path / "notifications")
-    # notify seq 1 and 2 — worker fast-forwards to the max per table
-    spark.createDataFrame(
-        [("t", 1), ("t", 2)], COMMIT_NOTIFICATION_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(notif_dir)
-    q = start_replication_stream(
-        spark, notif_dir, lambda name: (src, dst), str(tmp_path / "cp")
-    )
-    q.awaitTermination(120)
-    assert dst.read().count() == 150
-    # second notification wave replicates the new commit only
-    src.append(spark.range(150, 160).toDF("id"))
-    spark.createDataFrame([("t", 3)], COMMIT_NOTIFICATION_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(notif_dir)
-    q2 = start_replication_stream(
-        spark, notif_dir, lambda name: (src, dst), str(tmp_path / "cp")
-    )
-    q2.awaitTermination(120)
-    assert dst.read().count() == 160
 
 
 def test_pinned_recall_oracle_assignments_are_argmin_consistent():

@@ -4,35 +4,52 @@ target region's event queue, read back identical data from the mirror."""
 
 import pytest
 
+from iceberg_hybrid_spark.control import sync
 from iceberg_hybrid_spark.control.gate import CommitGate
 from iceberg_hybrid_spark.control.registry import Region, Registry, StorageLocation
 from iceberg_hybrid_spark.control.sync import (
     COMPLETED,
+    DATA_SYNC,
     FAILED,
     PENDING,
     MultiRegionCoordinator,
     SyncEventStore,
     SyncProgress,
 )
+from iceberg_hybrid_spark.lake import replication as R
+from iceberg_hybrid_spark.lake.catalog import HyCatalog
 from iceberg_hybrid_spark.lake.table import HyTable
+from iceberg_hybrid_spark.session import local_frame
+
+TABLE = "analytics.user_events"
+US, EU = "us-east-1", "eu-west-1"
 
 
 @pytest.fixture()
 def coordinator(spark, tmp_path):
     reg = Registry(spark)
-    for rid in ("us-east-1", "eu-west-1"):
+    for rid in (US, EU):
         reg.register_region(
             Region(rid, rid), StorageLocation(rid, f"https://{rid}", str(tmp_path / rid), "wh")
         )
     gate = CommitGate(spark)
     events = SyncEventStore(spark)
-    table = "analytics.user_events"
-    catalogs = {
-        "us-east-1": {table: HyTable(spark, str(tmp_path / "us-east-1" / "wh" / table))},
-        "eu-west-1": {table: HyTable(spark, str(tmp_path / "eu-west-1" / "wh" / table))},
-    }
-    reg.register_table_location(table, "us-east-1", str(tmp_path / "us-east-1" / "wh" / table))
+    # <warehouse>/<namespace>/<name>, so a HyCatalog over the warehouse sees it
+    root = {rid: str(tmp_path / rid / "wh" / "analytics" / "user_events") for rid in (US, EU)}
+    catalogs = {rid: {TABLE: HyTable(spark, root[rid])} for rid in (US, EU)}
+    reg.register_table_location(TABLE, US, root[US])
     return MultiRegionCoordinator(spark, reg, gate, events, catalogs)
+
+
+def _batch(spark, lo, hi):
+    """Rows ``lo..hi`` as a driver-held frame: a commit encodes it
+    without a Spark write job."""
+    rows = [(str(i), "click") for i in range(lo, hi)]
+    return local_frame(spark, rows, "user_id string, event_type string")
+
+
+def _rows(table):
+    return sorted(table.read().collect())
 
 
 def test_write_sync_read_workflow(spark, coordinator, count_jobs):
@@ -203,3 +220,115 @@ def test_sync_progress_eta(spark):
     p.with_event_processed(True)
     p.with_event_processed(True)
     assert p.estimated_completion_ms(now_ms=3000) is None
+
+
+def test_drain_after_source_expiry_fails_no_event(spark, coordinator, tmp_path):
+    """A backlog that outlives source expiry: 9 undrained commits, then
+    maintenance compacts and keeps the last 3 snapshots, so 7 events name
+    an expired commit.  The drain brings the mirror to the source head
+    and completes every event."""
+    commits = [coordinator.coordinate_write(TABLE, _batch(spark, 10 * i, 10 * i + 10), US)[1]
+               for i in range(9)]
+    HyCatalog(spark, str(tmp_path / US / "wh")).run_maintenance(retain_last=3)
+    src, mirror = coordinator.catalogs[US][TABLE], coordinator.catalogs[EU][TABLE]
+    live = {s.snapshot_id for s in src.snapshots()}
+    assert sum(c.snapshot_id not in live for c in commits) == 7
+    progress = coordinator.process_pending_events(EU)
+    assert (progress.total, progress.failed) == (18, 0)
+    assert _rows(mirror) == _rows(src) and len(_rows(mirror)) == 90
+    R.audit_closure(mirror)
+
+
+def test_backlog_drains_with_one_replicate(spark, coordinator, monkeypatch):
+    """Fast-forward: a drain of a 5-commit backlog replicates the source
+    head once, and the mirror gains one staged and one visible version
+    file; the visible head names the source snapshot it carries."""
+    coordinator.coordinate_write(TABLE, _batch(spark, 0, 10), US)
+    coordinator.process_pending_events(EU)
+    for i in range(1, 6):
+        coordinator.coordinate_write(TABLE, _batch(spark, 10 * i, 10 * i + 10), US)
+    calls = []
+    real = sync.replicate  # the coordinator's reference to R.replicate
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(sync, "replicate", counted)
+    src, mirror = coordinator.catalogs[US][TABLE], coordinator.catalogs[EU][TABLE]
+    versions = len(mirror._version_files())
+    progress = coordinator.process_pending_events(EU)
+    assert (progress.successful, progress.failed) == (10, 0)
+    assert len(calls) == 1
+    assert len(mirror._version_files()) == versions + 2
+    head, carried = src.current_snapshot(), mirror.current_snapshot()
+    assert carried.summary["replicated_from"] == head.snapshot_id
+    assert carried.summary["source_seq"] == head.sequence_number
+    assert _rows(mirror) == _rows(src)
+
+
+def test_restarted_coordinator_converges_on_its_next_event(spark, coordinator):
+    """The event store is process memory, so a restarted coordinator has
+    lost the backlog's events.  Its next drain of any DataSync (here a
+    redelivered one naming the oldest commit) still brings the mirror to
+    the source head."""
+    _, first = coordinator.coordinate_write(TABLE, _batch(spark, 0, 10), US)
+    coordinator.coordinate_write(TABLE, _batch(spark, 10, 20), US)
+    restarted = MultiRegionCoordinator(
+        spark, coordinator.registry, coordinator.gate, SyncEventStore(spark),
+        coordinator.catalogs,
+    )
+    restarted.events.create_event(DATA_SYNC, TABLE, first.snapshot_id, US, EU)
+    assert restarted.process_pending_events(EU).failed == 0
+    src, mirror = coordinator.catalogs[US][TABLE], coordinator.catalogs[EU][TABLE]
+    assert mirror.current_snapshot().summary["replicated_from"] == src.current_snapshot().snapshot_id
+    assert _rows(mirror) == _rows(src)
+
+
+def test_failed_copy_converges_on_retry(spark, coordinator, monkeypatch):
+    """A copy that raises fails its DataSync and exposes nothing at the
+    mirror; retrying the failed event and draining again converges."""
+    real = R.copy_files
+
+    def link_down(*args):
+        monkeypatch.setattr(R, "copy_files", real)  # fails once
+        raise OSError("mirror link down")
+
+    monkeypatch.setattr(R, "copy_files", link_down)
+    coordinator.coordinate_write(TABLE, _batch(spark, 0, 50), US)
+    progress = coordinator.process_pending_events(EU)
+    assert (progress.successful, progress.failed) == (1, 1)
+    assert [e.event_type for e in coordinator.events.get_failed_events()] == [DATA_SYNC]
+    mirror = coordinator.catalogs[EU][TABLE]
+    assert mirror.current_snapshot() is None
+    assert coordinator.retry_failed_events() == 1
+    progress = coordinator.process_pending_events(EU)
+    assert (progress.successful, progress.failed) == (1, 0)
+    assert _rows(mirror) == _rows(coordinator.catalogs[US][TABLE])
+
+
+def test_replicate_commits_the_snapshot_it_resolved(spark, tmp_path, monkeypatch):
+    """A source commit that lands after ``replicate`` reads the source
+    head (an overwrite, which drops the head's files) does not change
+    what it copies: the mirror verifies and carries the resolved
+    snapshot."""
+    src = HyTable(spark, str(tmp_path / "us" / "t"))
+    dst = HyTable(spark, str(tmp_path / "eu" / "t"))
+    src.create(_batch(spark, 0, 40))
+    resolved = src.current_snapshot()
+    expected = _rows(src)
+    real = src.current_snapshot
+
+    def then_overwrite():
+        snap = real()
+        monkeypatch.setattr(src, "current_snapshot", real)
+        src.overwrite(_batch(spark, 100, 110))
+        return snap
+
+    monkeypatch.setattr(src, "current_snapshot", then_overwrite)
+    published, _ = R.replicate(src, dst)
+    assert src.current_snapshot().snapshot_id != resolved.snapshot_id  # it landed
+    assert published.summary["replicated_from"] == resolved.snapshot_id
+    R.verify(dst, published)
+    R.audit_closure(dst)
+    assert _rows(dst) == expected
