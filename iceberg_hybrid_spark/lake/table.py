@@ -312,7 +312,8 @@ def _create_once(path: str, doc: dict) -> None:
     tailing _meta/) never sees a half-written one."""
     tmp = path + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
-        json.dump(doc, fh)
+        # one dumps call: json.dump streams through the pure-Python encoder
+        fh.write(json.dumps(doc))
     try:
         os.link(tmp, path)
     finally:
@@ -469,9 +470,17 @@ def _struct_ddl(cols) -> str:
     return "struct<" + ",".join(f"{c}:{t}" for c, t in cols) + ">"
 
 
-def _read_schema(cols) -> str:
-    """A ``DataFrameReader.schema`` string for (name, type) pairs."""
-    return ", ".join("`{}` {}".format(c.replace("`", "``"), t) for c, t in cols)
+def _read_schema(cols) -> SPARK_T.StructType:
+    """A ``DataFrameReader.schema`` for (name, type) pairs."""
+    ddl = ", ".join("`{}` {}".format(c.replace("`", "``"), t) for c, t in cols)
+    return _parsed_schema(ddl)
+
+
+@functools.lru_cache(maxsize=256)
+def _parsed_schema(ddl: str) -> SPARK_T.StructType:
+    """``ddl`` parsed once: the JVM re-parses a DDL string with its SQL
+    parser on every read, a ``StructType`` it takes as JSON."""
+    return SPARK_T.StructType.fromDDL(ddl)
 
 
 def _epoch_columns(cols, renames, added_seq: int) -> list[tuple[str, str, str]]:

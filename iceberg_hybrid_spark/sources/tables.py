@@ -43,51 +43,40 @@ TABLE_NAMES = (
 # Small dimension tables that should always broadcast in joins.
 DIM_TABLES = frozenset({"region", "nation", "supplier"})
 
-# Expression-heavy corpus tables: per-row work (shingle folds, simhash
-# vote folds, window chunking, Arrow kernels) dominates their queries,
-# so a degenerate scan split count serializes the whole query.  The
-# relational fact tables (lineitem/orders/events) are deliberately NOT
-# here: their queries are shuffle/join-bound, and an extra pre-join
-# exchange measurably loses (A/B at sf0.1: q3 0.98 s with vs 0.41 s
-# without) — the first groupBy/join shuffle already spreads their work.
-FOLD_HEAVY_TABLES = frozenset({"documents", "embeddings"})
+# Tables whose scan layout is part of a result.  Seeded distributed
+# KMeans and PQ training over ``embeddings`` (IVF, SemDeDup, the ``*_pq_*``
+# codebooks) reads the rows in the order and partitioning the scan hands
+# it, and its fitted artifacts are pinned as oracle literals, so the
+# table is read in the layout they were trained on.  ``documents`` is
+# not here: every documents query is a value-level function of its rows,
+# and on one-row-group files the 64-way exchange cost more than the
+# parallelism it bought, even for the fold-heavy queries (docs/SCALING.md,
+# "The rescue re-measured").
+FOLD_HEAVY_TABLES = frozenset({"embeddings"})
 
-# Rescue width for degenerate scans.  A CONSTANT, not defaultParallelism,
-# on purpose: round-robin repartition (sort-before-shuffle, so the layout
-# is a pure function of input order and width) feeds seeded KMeans
-# training (IVF / SemDeDup), whose fitted centroids are pinned as oracle
-# literals — a core-count-dependent width would make the trained model,
-# and therefore correctness, depend on the machine.  64 saturates any
-# plausible local executor count; the guard never fires on a real
-# many-file corpus, so this is not a cluster-size assumption.
+# Width of the pinned training layout.  A CONSTANT, not defaultParallelism:
+# round-robin repartition (sort-before-shuffle, so the layout is a pure
+# function of input order and width) feeds the seeded training above, and
+# a core-count-dependent width would make the trained model, and so
+# correctness, depend on the machine.
 _RESCUE_PARTITIONS = 64
 
 
 def _ensure_scan_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Rescue degenerate scan granularity: when a fold-heavy table arrives as
-    fewer splits than the constant rescue width (single-file fixtures,
-    one-row-group parquet — which CANNOT split below a row group — or a
-    non-splittable codec), round-robin repartition to that width so
-    per-row expression work runs on every core instead of one.
+    """Hold a pinned-artifact table in its training layout: when the scan
+    arrives as fewer splits than the constant width (single-file
+    fixtures, one-row-group parquet, a non-splittable codec), round-robin
+    repartition to that width.
 
-    This is Spark's own documented remedy for unsplittable inputs, made
-    conditional: at 100 TB a fact scan has thousands of row-group splits
-    and the guard is a no-op (no shuffle added); it only fires when the
-    alternative is a serialized map stage.  An explicit partition count
-    pins the exchange against AQE coalescing (584 KB of documents would
-    otherwise re-merge into one partition and re-serialize the fold).
-    Round-robin repartition is value-neutral and Catalyst pushes filters
-    and column pruning through it into the scan (verified in
-    docs/PLANS.md: PushedFilters survive).
-
-    The trigger is MACHINE-INDEPENDENT by design: it compares the scan's
-    split count against the constant rescue width, never against
-    defaultParallelism.  The rescued layout feeds seeded distributed
-    KMeans training (IVF / SemDeDup) whose fitted centroids are pinned
-    as oracle literals, so both the width (the constant below) and the
-    *decision to fire* must be a pure function of the input files — a
-    core-count-dependent trigger would silently change the trained
-    model, and therefore correctness, between hosts."""
+    The layout, not parallelism, is the reason: the seeded KMeans and PQ
+    artifacts pinned as oracle literals were trained on this 64-way
+    round-robin layout, so both the width and the *decision to fire*
+    must be a pure function of the input files, never of
+    defaultParallelism.  An explicit partition count pins the exchange
+    against AQE coalescing.  Round-robin repartition is value-neutral and
+    Catalyst pushes filters and column pruning through it into the scan
+    (docs/PLANS.md: PushedFilters survive).  A scan of 64 or more splits
+    is left as it is."""
     if df.rdd.getNumPartitions() < _RESCUE_PARTITIONS:
         return df.repartition(_RESCUE_PARTITIONS)
     return df

@@ -30,19 +30,25 @@ def tmp_table_root(tmp_path):
 @pytest.fixture()
 def count_jobs(spark):
     """``with count_jobs() as jobs: ...`` runs the body under a fresh
-    Spark job group; ``jobs.n`` is the number of jobs it launched."""
+    Spark job group; ``jobs.n`` is the number of jobs it launched and
+    ``jobs.tasks`` the number of tasks they completed."""
     sc = spark.sparkContext
 
     @contextmanager
     def counting():
         group = f"counted-{uuid.uuid4().hex}"
-        jobs = SimpleNamespace(n=None)
+        jobs = SimpleNamespace(n=None, tasks=None)
         sc.setJobGroup(group, "counted")
         try:
             yield jobs
         finally:
             sc._jsc.clearJobGroup()
             sc._jsc.sc().listenerBus().waitUntilEmpty()
-            jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
+            st = sc.statusTracker()
+            ids = st.getJobIdsForGroup(group)
+            infos = [st.getJobInfo(j) for j in ids]
+            stages = [st.getStageInfo(s) for i in infos if i is not None for s in i.stageIds]
+            jobs.n = len(ids)
+            jobs.tasks = sum(s.numCompletedTasks for s in stages if s is not None)
 
     return counting

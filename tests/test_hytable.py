@@ -269,6 +269,31 @@ def test_read_builds_without_a_spark_job(spark, tmp_table_root, count_jobs):
     assert df.count() == 30
 
 
+def test_version_file_is_json_dumps_of_its_snapshot(spark, tmp_table_root, monkeypatch):
+    """A committed version file holds ``json.dumps`` of the snapshot's
+    document, byte for byte."""
+    import json
+
+    from iceberg_hybrid_spark.lake import table as table_mod
+
+    docs = {}
+    create_once = table_mod._create_once
+
+    def recording(path, doc):
+        docs[path] = doc
+        create_once(path, doc)
+
+    monkeypatch.setattr(table_mod, "_create_once", recording)
+    t = HyTable(spark, tmp_table_root)
+    t.create(make_df(spark, 0, 20))
+    t.append(make_df(spark, 20, 30))
+    t.create_branch("b")
+    assert len(docs) == 3
+    for path, doc in docs.items():
+        with open(path, "rb") as fh:
+            assert fh.read() == json.dumps(doc).encode()
+
+
 def test_unevolved_read_is_the_bare_relation(spark, tmp_table_root):
     """Files whose names are the table's read as they are: no projection
     over the scan."""

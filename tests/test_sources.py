@@ -1,10 +1,13 @@
 """``load_table`` reads a table's schema from a parquet footer in the
 driver: the schema must equal the one Spark's own inference gives, and
-registering a table must launch no Spark job."""
+registering a table must launch no Spark job.  Only ``embeddings`` is
+repartitioned to the 64-way layout its pinned trained artifacts need;
+every other table is the bare scan."""
 
 import datetime
 import decimal
 import os
+import re
 import shutil
 
 import pyarrow as pa
@@ -184,3 +187,26 @@ def test_load_runs_no_spark_job(spark, tmp_path, count_jobs):
         for name in TABLE_NAMES:
             load_table(spark, sf_dir, name)
     assert jobs.n == 0
+
+
+def _round_robins(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"RoundRobinPartitioning\(\d+\)", plan)
+
+
+def test_only_embeddings_keeps_the_training_layout(spark):
+    assert _round_robins(load_table(spark, SF_DIR, "documents")) == []
+    assert _round_robins(load_table(spark, SF_DIR, "embeddings")) == ["RoundRobinPartitioning(64)"]
+
+
+def test_dedup_exact_documents_task_budget(spark, count_jobs):
+    """500 one-row-group documents hash in a handful of tasks (68 at
+    ``local[4]`` while every documents scan went through the 64-way
+    round-robin exchange)."""
+    from iceberg_hybrid_spark.queries.llm import dedup_exact_documents
+
+    load_table(spark, SF_DIR, "documents")
+    with count_jobs() as jobs:
+        rows = dedup_exact_documents(spark, SF_DIR).collect()
+    assert jobs.tasks <= 8
+    assert sum(r.dup_count for r in rows) == 500
